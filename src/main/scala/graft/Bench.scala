@@ -75,22 +75,12 @@ object Bench {
     tally.bytes.get()
   }
 
-  private def newSession(cpus: String, sfDir: String): SparkSession = {
-    val spark = GraftSession.pinConf(SparkSession.builder())
-      .master(s"local[$cpus]")
-      // Default sizes from the FIXTURE (GraftSession.shufflePartitionsFor:
-      // small fixtures stay = cpus, the bench contract; sf100's 15 GB gets
-      // the ≥256 partitions its 600M-row in-partition sorts need WITHOUT a
-      // manual knob — the r13 q_gtable_running adjudication, now automatic).
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS remains as the explicit A/B override.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          GraftSession.shufflePartitionsFor(sfDir, cpus.toInt).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+  private def newSession(sfDir: String): SparkSession = {
+    // Partitions sized from the FIXTURE (GraftSession.shufflePartitionsFor:
+    // small fixtures stay = cpus, the bench contract; sf100's 15 GB gets
+    // the ≥256 partitions its 600M-row in-partition sorts need).
+    val spark = GraftSession.start(GraftSession.fromEnv(GraftSession.builder(
+      shufflePartitions = GraftSession.shufflePartitionsFor(sfDir, GraftSession.cpus))))
     tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
     spark
@@ -184,7 +174,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
     val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b re-checks a suspect subset (~50x cheaper
@@ -201,7 +190,7 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
-    var spark = newSession(cpus, sfDir)
+    var spark = newSession(sfDir)
 
     // warm-up pass (untimed; in isolate mode each query warms its own fresh
     // session instead). SPARK_GRAFT_BENCH_WARMUP=0 skips it — for the
@@ -219,7 +208,7 @@ object Bench {
     // exit code so a regression can't bench as an improvement.
     val results: Seq[(String, Either[String, QStat])] = ordered.zipWithIndex.map {
       case ((name, fn), i) =>
-        if (isolate && i > 0) { spark.stop(); spark = newSession(cpus, sfDir) }
+        if (isolate && i > 0) { spark.stop(); spark = newSession(sfDir) }
         try {
           if (isolate && warmup) { fn(spark, sfDir).count(); sweep(spark) } // per-query warm-up
           val gc0 = gcMs()

@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
+/** The one SparkSession factory of the graft engine: every main (Verify,
+  * Bench, StreamBench, PlanDump, Smoke, MicroBench), the benchmark harness
+  * and the test session build through [[builder]], and [[tune]] re-applies
+  * the same [[contract]] to a session created elsewhere.
   *
   * Capability target: alibaba/table-computing's `StreamProcessing` runtime
   * (reference: src/main/java/com/alibaba/tc/sp/StreamProcessing.java:36-38 —
@@ -10,6 +13,19 @@ import org.apache.spark.sql.SparkSession
   * all of that is session configuration: Tungsten handles columnar/off-heap
   * memory, the shuffle service handles `Rehash`, and AQE replaces the
   * reference's "tune thread count by measured throughput" loop (README.md:141-152).
+  *
+  * Environment read here (all optional):
+  *   - `SPARK_GRAFT_CPUS`: local cores and default shuffle partitions
+  *     (default: this JVM's available processors);
+  *   - `SPARK_GRAFT_MASTER`: master URL (default `local[<cpus>]`); a
+  *     `local-cluster[...]` master ships the engine classes to its executor
+  *     JVMs via `spark.executor.extraClassPath`;
+  *   - `SPARK_GRAFT_EXECUTOR_MEM`: `spark.executor.memory` (see [[fromEnv]]);
+  *   - `SPARK_GRAFT_PIN_RELIABLE=true|auto`: the pin mode ([[Pinned]]; see
+  *     [[fromEnv]]);
+  *   - `SPARK_GRAFT_LOG_DAG=1`: DAGScheduler at INFO (see [[start]]).
+  * `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_MASTER` only supply [[builder]]'s
+  * defaults; the mains pass their builder through [[fromEnv]].
   *
   * Scale stance (100 TB / 1000 executors): nothing here is local-mode-specific
   * except the `master` default. Shuffle partition count is a starting hint —
@@ -21,9 +37,36 @@ object GraftSession {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Local cores: `SPARK_GRAFT_CPUS`, else this JVM's available processors. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session contract: runtime SQL confs every graft query needs for
+    * correct results. [[builder]] sets them at start-up and [[tune]]
+    * re-applies them, so both read this one list.
+    */
+  private val contract: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    // The test data uses parquet TIMESTAMP(NANOS); Spark's TimestampType is
+    // micros. Read nanos as LongType and derive epoch-millis columns — this
+    // mirrors the reference's own convention of BIGINT epoch-ms event time
+    // (reference: window/SlideWindow.java:334-335 enforces a BIGINT time col).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Planning policy [[builder]] sets on top of the [[contract]]. [[tune]]
+    * leaves these alone: a session built elsewhere (or a spec) may set them
+    * on purpose, e.g. a -1 broadcast threshold at scale.
+    */
+  private val policy: Seq[(String, String)] = Seq(
+    // Skewed group/join keys re-split at runtime; essential at 100 TB where
+    // a single hot key would otherwise straggle one executor.
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString)
+
   def builder(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+      shufflePartitions: Int = cpus,
       rocksDbStateStore: Boolean = false
   ): SparkSession.Builder = {
     val b = SparkSession
@@ -31,24 +74,55 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Skewed group/join keys re-split at runtime; essential at 100 TB where
-      // a single hot key would otherwise straggle one executor.
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // The test data uses parquet TIMESTAMP(NANOS); Spark's TimestampType is
-      // micros. Read nanos as LongType and derive epoch-millis columns — this
-      // mirrors the reference's own convention of BIGINT epoch-ms event time
-      // (reference: window/SlideWindow.java:334-335 enforces a BIGINT time col).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+    (contract ++ policy).foreach { case (k, v) => b.config(k, v) }
+    // Executors of a local-cluster master are fresh JVMs without this
+    // process's classpath; they share this box, so they read the engine
+    // classes from where this JVM loaded them.
+    if (master.startsWith("local-cluster"))
+      b.config("spark.executor.extraClassPath", new java.io.File(
+        getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath)
     // Large streaming state (high-cardinality keyed over-windows, stream
     // dedup) should live off the executor heap: RocksDB spills to local disk
     // and keeps the JVM heap for execution. Per-query override:
     // spark.sql.streaming.stateStore.providerClass in writeStream options.
     if (rocksDbStateStore) b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     else b
+  }
+
+  /** Apply the deployment env (`SPARK_GRAFT_EXECUTOR_MEM`,
+    * `SPARK_GRAFT_PIN_RELIABLE`) to `b`. Kept out of [[builder]] so a session
+    * built with explicit arguments (the test session, the benchmark harness)
+    * does not depend on the shell it runs in.
+    */
+  def fromEnv(b: SparkSession.Builder): SparkSession.Builder = {
+    // local-cluster GOTCHA: the [n,cores,mem] worker size only CAPS
+    // resources — executor JVMs still launch with the spark.executor.memory
+    // DEFAULT (1g), which OOMs sf100-scale stages while sf0.01 sails through.
+    sys.env.get("SPARK_GRAFT_EXECUTOR_MEM").foreach(m => b.config("spark.executor.memory", m))
+    // Reliable pins write FILES; the cleaner's checkpoint reaping is a static
+    // conf, so it must land here, or a long multi-pin run accumulates every
+    // dead plan's checkpoint data on disk.
+    sys.env.get("SPARK_GRAFT_PIN_RELIABLE").map(_.trim.toLowerCase) match {
+      case Some(m @ ("true" | "auto")) =>
+        b.config(Pinned.ReliableKey, m)
+          .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      case _ => b
+    }
+  }
+
+  /** Get or create the session `b` describes, with the root logger at WARN.
+    * With `SPARK_GRAFT_LOG_DAG=1` the DAGScheduler logs at INFO: the
+    * chaos/fetchfail evidence logs need the "Resubmitting ..." stage-recompute
+    * lines, which Spark only emits at INFO.
+    */
+  def start(b: SparkSession.Builder = fromEnv(builder())): SparkSession = {
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    if (sys.env.get("SPARK_GRAFT_LOG_DAG").contains("1"))
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.INFO)
+    s
   }
 
   /** Data-driven shuffle-partition sizing (round-14 verdict item 5): the
@@ -64,8 +138,7 @@ object GraftSession {
     * fixtures keep partitions == cores — the established bench contract)
     * and capped at 4096 (beyond that, per-task overhead dominates on one
     * box). AQE coalesces the small ones at runtime, so oversizing is cheap;
-    * undersizing is the spill cliff. The explicit
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS override remains for A/B probes.
+    * undersizing is the spill cliff.
     */
   def shufflePartitionsFor(sfDir: String, cpus: Int): Int = {
     def sizeOf(f: java.io.File): Long =
@@ -77,36 +150,12 @@ object GraftSession {
     math.max(cpus, math.min(4096L, bytes / (32L << 20) + 1).toInt)
   }
 
-  /** Propagate the opt-in reliable-pin mode (env SPARK_GRAFT_PIN_RELIABLE=
-    * true|auto → conf [[Pinned.ReliableKey]]) into a session builder. Also
-    * enables the context cleaner's checkpoint reaping (a static conf, so it
-    * must land at builder time): reliable pins write FILES, and a long
-    * multi-pin run would otherwise accumulate every dead plan's checkpoint
-    * data on disk.
-    */
-  def pinConf(b: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_PIN_RELIABLE").map(_.trim.toLowerCase) match {
-      case Some(m @ ("true" | "auto")) =>
-        val wb = b.config(Pinned.ReliableKey, m)
-          .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        sys.env.get("SPARK_GRAFT_PIN_AUTOBYTES")
-          .fold(wb)(v => wb.config(Pinned.AutoBytesKey, v.trim))
-      case _ => b
-    }
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Apply graft runtime confs to an externally-created session (e.g. the
-    * driver-owned one in Verify/Bench). Only mutable confs.
+  /** Re-apply the [[contract]] to a session this factory did not build (a
+    * driver-owned one enters through `Tables.load`). Only mutable confs; the
+    * [[policy]] confs are the session owner's to choose.
     */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    contract.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

@@ -21,8 +21,7 @@ object MicroBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args.headOption.getOrElse("shingle") match {
       case "shingle" => shingleProbe(spark.emptyDataFrame.sparkSession, d)

@@ -142,11 +142,6 @@ object Pinned {
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(resolveCheckpointDir(
           sc.master, sc.isLocal, sc.applicationId, spark.conf.getOption(DirKey)))
-      // Dataset.storageLevel consults the session CacheManager by logical
-      // plan — non-NONE means the CALLER (or an equivalent plan elsewhere)
-      // already holds a cache entry, and persist/unpersist here would evict
-      // it out from under them. Their blocks serve the checkpoint read just
-      // as well, so only wrap when no entry exists.
       // A pre-existing cache entry for this plan means the CALLER (or an
       // equivalent plan elsewhere) holds blocks that persist/unpersist here
       // would evict out from under them (CacheManager matches by logical
@@ -155,7 +150,8 @@ object Pinned {
       // QueryExecution stages before persist() registers the cache, which
       // measurably de-optimizes the eager checkpoint that follows (sf10
       // semanticDedup 7.2 → 11.3 s, sf100 150 → 385 s — the bisected
-      // round-17 regression).
+      // round-17 regression). The caller's blocks serve the checkpoint read
+      // just as well, so only wrap when no entry exists.
       val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val preCached = classic.sharedState.cacheManager.lookupCachedData(
         classic, classic.sessionState.executePlan(ds.queryExecution.logical).analyzed

@@ -41,7 +41,7 @@ object PlanDump {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+    val spark = GraftSession.start()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     dump(spark, args.toSeq, d)
     spark.stop()

@@ -5,7 +5,7 @@ package graft
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+    val spark = GraftSession.start()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

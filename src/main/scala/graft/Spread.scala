@@ -22,13 +22,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * are small (ids + text, never payloads/signatures).
   */
 object Spread {
-  /** A/B kill-switch for adjudication runs: SPARK_GRAFT_SPREAD=0 disables
-    * every fan so a suspected fan-caused regression can be bisected in one
-    * env flip without a rebuild.
-    */
-  private val disabled = sys.env.get("SPARK_GRAFT_SPREAD").contains("0")
-
-  /** CONTRACT: call only on a frame rooted directly at a scan (or another
+  /** Fan `df` out to the session's parallelism by hash of `key` when its
+    * scan provides fewer partitions than that.
+    *
+    * CONTRACT: call only on a frame rooted directly at a scan (or another
     * already-materialized source). Probing the partition count requires
     * physically planning `df` once on the driver, and the count read is the
     * PRE-AQE one — both fine for a scan root (planning a scan is cheap and
@@ -36,8 +33,8 @@ object Spread {
     * plan-and-discard and read a pre-coalesce number that AQE then changes.
     * `toRdd` (the internal-row RDD) rather than `df.rdd` avoids planning a
     * second, throwaway deserializer projection just to count partitions.
-    */
-  /** `minBytes` > 0 additionally requires the frame's Catalyst size
+    *
+    * `minBytes` > 0 additionally requires the frame's Catalyst size
     * estimate to reach that floor before fanning: the repartition ships
     * every byte once, so on a small under-split input (the KB-scale bench
     * fixture is ONE split) the exchange costs more than the unlocked
@@ -46,10 +43,10 @@ object Spread {
     * sf100 the same fan on the 560 MB / 5-split scan is the difference
     * between 5 and 32 cores doing the digest work. Callers whose per-row
     * work is extreme enough to win even at KB scale (Unigram.encode's
-    * Viterbi DP) pass 0.
+    * Viterbi DP) pass 0. The fan-on/fan-off A/B behind these rules is in
+    * OPTIMIZATION_r17.md and OPTIMIZATION_r18.md.
     */
   def fan(df: DataFrame, key: Column, minBytes: Long = 0L): DataFrame = {
-    if (disabled) return df
     if (minBytes > 0) {
       val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
       if (est < minBytes) return df

@@ -35,9 +35,10 @@ import org.apache.spark.sql.functions._
   * the engine-side snapshot throughput; the JDBC upsert half is spec'd
   * end-to-end in CdcStreamSpec and bounded by the target DB, not the engine.
   *
-  * Env: SPARK_GRAFT_CPUS (default 8) cores + shuffle partitions;
-  * SPARK_GRAFT_ROCKSDB=1 swaps HDFS-backed state for RocksDB, measuring the
-  * large-state configuration recommended at 100 TB key cardinalities.
+  * Env: the session env GraftSession reads (SPARK_GRAFT_CPUS sets cores and
+  * shuffle partitions); SPARK_GRAFT_ROCKSDB=1 swaps HDFS-backed state for
+  * RocksDB, measuring the large-state configuration recommended at 100 TB
+  * key cardinalities.
   */
 object StreamBench {
   case class E(ts: java.sql.Timestamp, key: Long, value: Double)
@@ -56,48 +57,25 @@ object StreamBench {
     val numArgs = args.dropWhile(a => !a.forall(_.isDigit))
     val total = if (numArgs.nonEmpty) numArgs(0).toInt else 1000000
     val batchSize = if (numArgs.length > 1) numArgs(1).toInt else 100000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val rocksdb = sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,8192]: the soak's stateful
-    // operators run across separate executor JVMs (real state-store
-    // serialization + shuffle transport) — the Verify multi-JVM mode.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      b.config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-    // local-cluster worker memory only CAPS executors — the executor JVM
-    // heap is spark.executor.memory (default 1g), so multi-JVM soaks need
-    // the same knob Verify exposes
-    sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")
-      .foreach(m => b.config("spark.executor.memory", m))
-    if (rocksdb)
-      b.config("spark.sql.streaming.stateStore.providerClass", GraftSession.RocksDbProvider)
-    val spark = b.getOrCreate()
-    // SPARK_GRAFT_LOG_DAG=1 (chaos evidence runs): root at WARN so
-    // Lost-executor / recovery lines surface, DAGScheduler at INFO for the
-    // "Resubmitting" stage-recompute lines (mirrors graft.Verify)
-    if (sys.env.get("SPARK_GRAFT_LOG_DAG").contains("1")) {
-      spark.sparkContext.setLogLevel("WARN")
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.INFO)
-    } else spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_MASTER=local-cluster[2,16,8192] (read by GraftSession):
+    // the soak's stateful operators run across separate executor JVMs (real
+    // state-store serialization + shuffle transport) — the Verify multi-JVM mode.
+    val spark = GraftSession.start(GraftSession.fromEnv(
+      GraftSession.builder(rocksDbStateStore = rocksdb)))
 
     val (rows, secs) = mode match {
-      case "file"   => runFile(spark, total, batchSize, cpus.toInt)
-      case "ingest" => runIngest(spark, total, batchSize, cpus.toInt)
-      case "admit"  => runAdmit(spark, total, batchSize, cpus.toInt)
+      case "file"   => runFile(spark, total, batchSize, cpus)
+      case "ingest" => runIngest(spark, total, batchSize, cpus)
+      case "admit"  => runAdmit(spark, total, batchSize, cpus)
       case "cdc"    => runCdc(spark, total, batchSize)
-      case "soak"   => runSoak(spark, total, batchSize, cpus.toInt)
-      case "soak_over" => runSoakOver(spark, total, batchSize, cpus.toInt)
-      case "soak_scd2" => runSoakScd2(spark, total, batchSize, cpus.toInt)
-      case "soak_semdedup" => runSoakSemDedup(spark, total, batchSize, cpus.toInt)
-      case "soak_semhandover" => runSoakSemHandover(spark, total, batchSize, cpus.toInt)
-      case "soak_fullchain" => runSoakFullChain(spark, total, batchSize, cpus.toInt)
+      case "soak"   => runSoak(spark, total, batchSize, cpus)
+      case "soak_over" => runSoakOver(spark, total, batchSize, cpus)
+      case "soak_scd2" => runSoakScd2(spark, total, batchSize, cpus)
+      case "soak_semdedup" => runSoakSemDedup(spark, total, batchSize, cpus)
+      case "soak_semhandover" => runSoakSemHandover(spark, total, batchSize, cpus)
+      case "soak_fullchain" => runSoakFullChain(spark, total, batchSize, cpus)
       case _        => runMemory(spark, total, batchSize)
     }
     val rps = rows / secs

@@ -1,49 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,8192] runs the registry across
-    // SEPARATE executor JVMs (real closure serialization, broadcast over a
-    // real transport, task retry) — the round-14 multi-JVM evidence mode.
-    // Executors are fresh JVMs without this process's -cp, so the engine
-    // classes ship via executor extraClassPath (same box by definition).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      // fixture-sized, not a knob (GraftSession.shufflePartitionsFor):
-      // small fixtures stay = cpus; scale fixtures get enough partitions
-      // that in-partition sorts don't hit the spill-merge cliff.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          GraftSession.shufflePartitionsFor(sfDir, cpus.toInt).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-    // local-cluster GOTCHA: the [n,cores,mem] worker size only CAPS
-    // resources — executor JVMs still launch with the spark.executor.memory
-    // DEFAULT (1g), which OOMs sf100-scale stages while sf0.01 sails
-    // through. SPARK_GRAFT_EXECUTOR_MEM sets the real executor heap.
-    sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")
-      .foreach(m => builder.config("spark.executor.memory", m))
-    // SPARK_GRAFT_PIN_RELIABLE=true switches every operator pin from
-    // localCheckpoint to a reliable file checkpoint (graft.Pinned) — the
-    // mode where executor loss costs a re-read, not the job.
-    GraftSession.pinConf(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_LOG_DAG=1: DAGScheduler at INFO while the root stays WARN —
-    // the chaos/fetchfail evidence logs need the "Resubmitting ..." stage-
-    // recompute lines, which Spark only emits at INFO.
-    if (sys.env.get("SPARK_GRAFT_LOG_DAG").contains("1"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.INFO)
+    // Partitions are fixture-sized (GraftSession.shufflePartitionsFor); the
+    // master (e.g. a multi-JVM local-cluster) and pin mode come from the env
+    // GraftSession reads.
+    val spark = GraftSession.start(GraftSession.fromEnv(GraftSession.builder(
+      shufflePartitions = GraftSession.shufflePartitionsFor(sfDir, GraftSession.cpus))))
     new java.io.File(outDir).mkdirs()
     // Optional subset (comma-separated names) for local spot checks; the
     // driver leaves it unset and gets the full registry. oracle_sql.json is

@@ -178,8 +178,8 @@ class GTable(val df: DataFrame) {
     * the in-partition external sort spill-merges (measured at sf100: 600M
     * rows over 32 partitions = 342 s, over 256 = 67.8 s, sub-linear vs
     * sf10 — BASELINE round-13 probe). A cluster's default parallelism
-    * does this automatically; single-box probes set
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS. Any prefix-
+    * does this automatically; single-box runs size it from the fixture
+    * (GraftSession.shufflePartitionsFor). Any prefix-
     * computable OverWindowFunction (running sums/ranks/trailing frames —
     * the reference's examples, window/OverWindowFunction.java) ports
     * directly; a function needing the whole partition up front stays on

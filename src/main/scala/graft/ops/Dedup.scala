@@ -699,69 +699,18 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(GraftFunctions.windowHashes(col("toks"), w)))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
-    // Per-hash first-occurrence election + occurrence count, two shapes
-    // (graft.spans.shape — round-18 skew adjudication of the r17 verdict's
-    // "window form is a 100 TB skew risk" flag; MEASUREMENT SAID OTHERWISE):
-    //
-    //   - "window" (DEFAULT, the r17 form): min/count window aggregates
-    //     over one hash-partitioned exchange, no join, no second map pass.
-    //     On the adversarial fixture (tools/gen_skew_docs.py: a 19-token
-    //     boilerplate head in EVERY one of 2M docs — 10 window hashes at
-    //     2M occurrences each) it ran 46.9 s with FLAT gc (0.5 s): the
-    //     per-hash occurrence list WindowExec buffers is a spillable
-    //     ExternalAppendOnlyUnsafeRowArray and min/count is one streaming
-    //     pass over it — graceful, not the OOM/straggler cliff feared.
-    //   - "groupby": groupBy(h) with the (doc_id, pos) struct-min PACKED
-    //     into one guarded BIGINT (HashAggregate, map-side partials — a
-    //     hot hash collapses per map partition before the exchange), then
-    //     a SHUFFLE_HASH join back to `wins` (AQE-skew-splittable, and the
-    //     hint matters: Catalyst under-estimates an exploded scan of a
-    //     highly-compressible corpus and otherwise broadcast the 30M-row
-    //     wins side — 80.8 s). Same fixture: 67.7 s — the second map
-    //     evaluation of `wins` plus the join probes cost MORE than the
-    //     window buffering they avoid (cpu 995 s vs 410 s). Kept for A/B
-    //     re-adjudication at real 100 TB geometry, where a single hash
-    //     whose occurrence list exceeds one executor's spill budget would
-    //     flip the decision the other way.
-    //
-    // Value-identical either way: same first = min(doc_id, pos) tie-break
-    // (pack is lexicographic-order-preserving for 0 <= doc_id < 2^42,
-    // 0 <= pos < 2^21 — guarded per row, fail-fast, and pos < 2^21 means
-    // docs up to 2M tokens), same n_occ > 1 filter. ORACLE-identical on
-    // sf0.001/sf0.01 (207/207 with either shape).
-    val flagged = t.sparkSession.conf.getOption("graft.spans.shape")
-        .orElse(sys.env.get("SPARK_GRAFT_SPANS_SHAPE"))
-        .getOrElse("window") match {
-      case "window" =>
-        val byHash = Window.partitionBy(col("h"))
-        wins
-          .withColumn("first", min(struct(col("doc_id"), col("pos"))).over(byHash))
-          .withColumn("n_occ", count(lit(1)).over(byHash))
-          .filter(col("n_occ") > 1 &&
-            not(col("first.doc_id") === col("doc_id") && col("first.pos") === col("pos")))
-          .select(col("doc_id"), col("pos"))
-      case _ =>
-        val pack = expr(
-          "if(doc_id < 0 OR doc_id >= 4398046511104L OR pos < 0 OR pos >= 2097152L, " +
-            "cast(raise_error('duplicateSpans: (doc_id, pos) exceeds the 2^42/2^21 pack bounds') as bigint), " +
-            "doc_id * 2097152L + pos)")
-        val firsts = wins.groupBy(col("h"))
-          .agg(min(pack).as("mp"), count(lit(1)).as("n_occ"))
-          .filter(col("n_occ") > 1)
-          .select(col("h"), col("mp"))
-        // SHUFFLE_HASH, not planner's choice: Catalyst's size estimate for
-        // an exploded scan is the compressed file size times a constant —
-        // on a boilerplate-heavy (highly compressible) corpus it estimated
-        // the 30M-row wins side under the broadcast threshold and built a
-        // gigabyte hash relation on the driver (measured 80.8 s on the skew
-        // fixture). Forcing a shuffled-hash join keeps both sides
-        // exchange-partitioned by h (AQE splits the hot-hash partitions —
-        // the skew safety this shape exists for), builds the hash table on
-        // the provably-smaller firsts slice, and skips sort-merge's sort.
-        wins.join(firsts.hint("SHUFFLE_HASH"), Seq("h"))
-          .filter(pack =!= col("mp"))
-          .select(col("doc_id"), col("pos"))
-    }
+    // Per-hash first-occurrence election + occurrence count as min/count
+    // window aggregates over one hash-partitioned exchange: no join, no
+    // second map pass. WindowExec buffers each hash's occurrence list in a
+    // spillable array, so a hot hash degrades gracefully; the groupBy + join
+    // alternative measured slower (OPTIMIZATION_r18.md §4).
+    val byHash = Window.partitionBy(col("h"))
+    val flagged = wins
+      .withColumn("first", min(struct(col("doc_id"), col("pos"))).over(byHash))
+      .withColumn("n_occ", count(lit(1)).over(byHash))
+      .filter(col("n_occ") > 1 &&
+        not(col("first.doc_id") === col("doc_id") && col("first.pos") === col("pos")))
+      .select(col("doc_id"), col("pos"))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     flagged
       .withColumn("prev_end",
@@ -1030,26 +979,9 @@ object Dedup {
     // round-12 sf100 probe measured that flat assignment at 632 s for 2M
     // vectors). Every fixture through sf10 (k ≤ 160) stays on the exact
     // flat path bit-unchanged.
-    // SPARK_GRAFT_SEM_FORCE_FLAT=1 is the A/B adjudication knob for scale
-    // probes only: it forces the flat N×k argmax at any k so the two-level
-    // path's win is measured in the same session, not against a prior
-    // round's artifact. It replays round-12's LEAN flat formulation (agg
-    // struct without the vector, nv re-attached by id join): routing the
-    // A/B through ivfAssign's nv-carrying struct instead made the partial
-    // hash-agg fall back to sort-based aggregation over all N×k scored
-    // rows at sf100 and exhaust 59 GB of spill — a measured warning that
-    // payloads ride min(struct) aggregates safely only while the per-
-    // partition GROUP map fits. Never set in production or by any gate.
-    val asg = (if (sys.env.get("SPARK_GRAFT_SEM_FORCE_FLAT").contains("1")) {
-      val best = e.join(broadcast(cents), lit(true))
-        .select(col("vec_id"), col("cell"),
-          GraftFunctions.dot(col("nv"), col("cv")).as("ccos"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(negate(col("ccos")), col("cell"))).as("w"))
-        .select(col("vec_id"), col("w.cell").as("cell"))
-      best.join(e, Seq("vec_id"))
-    } else Similarity.assignCells(e, cents, k))
-      .select(col("cell"), col("vec_id"), col("nv"))
+    // The two-level path's win over the flat argmax at scale is recorded in
+    // BASELINE.md (round-13 SemDeDup two-level A/B).
+    val asg = Similarity.assignCells(e, cents, k).select(col("cell"), col("vec_id"), col("nv"))
     val a = asg.select(col("cell").as("cell_a"), col("vec_id").as("vec_a"), col("nv").as("va"))
     val b = asg.select(col("cell").as("cell_b"), col("vec_id").as("vec_b"), col("nv").as("vb"))
     val dropped = a.join(b, col("cell_a") === col("cell_b") && col("vec_b") < col("vec_a"))

@@ -19,6 +19,24 @@ class PinnedSpec extends SparkSpec {
     try body finally spark.conf.unset(Pinned.ReliableKey)
   }
 
+  /** Persistent-RDD ids registered since the `before` snapshot. Suites run
+    * sequentially and the ContextCleaner only REMOVES entries, so this is
+    * exactly what the code under test added and still holds — unlike a
+    * global count, which a concurrent reap of an earlier test's GC'd RDD
+    * can move either way.
+    */
+  private def addedSince(before: Set[Int]): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+
+  private def persistentIds: Set[Int] = addedSince(Set.empty)
+
+  /** unpersist(blocking = false) releases asynchronously — poll briefly
+    * instead of asserting the instant after.
+    */
+  private def releasedSince(before: Set[Int]): Boolean = (1 to 50).exists { _ =>
+    addedSince(before).isEmpty || { Thread.sleep(100); false }
+  }
+
   private def base = spark.range(0, 1000).select(
     col("id"), (col("id") % 7).as("k"), (col("id") * 3).as("v"))
 
@@ -34,7 +52,7 @@ class PinnedSpec extends SparkSpec {
 
   test("reliable mode writes checkpoint files, same rows, no lingering persist") {
     withReliable {
-      val before = spark.sparkContext.getPersistentRDDs.size
+      val before = persistentIds
       val p = base.pinned(false) // reliable mode is always eager by contract
       val dir = spark.sparkContext.getCheckpointDir
       assert(dir.nonEmpty, "reliable pin must establish a checkpoint dir")
@@ -49,16 +67,7 @@ class PinnedSpec extends SparkSpec {
         _.getClass.getSimpleName.contains("LogicalRDD")))
       assert(p.count() === 1000)
       assert(p.agg(sum("v")).head.getLong(0) === base.agg(sum("v")).head.getLong(0))
-      // unpersist(blocking = false) releases asynchronously — poll briefly
-      // instead of asserting the instant after. <= not ==: the shared
-      // session's ContextCleaner may concurrently reap an EARLIER suite's
-      // (or test's) GC'd localCheckpoint RDD, dropping the count below the
-      // snapshot — still "our persist is gone", which is the contract.
-      val released = (1 to 50).exists { _ =>
-        if (spark.sparkContext.getPersistentRDDs.size <= before) true
-        else { Thread.sleep(100); false }
-      }
-      assert(released, "the around-checkpoint persist must be released")
+      assert(releasedSince(before), "the around-checkpoint persist must be released")
     }
   }
 
@@ -122,12 +131,12 @@ class PinnedSpec extends SparkSpec {
 
   test("auto mode below the byte bound takes the localCheckpoint path") {
     withAuto(Long.MaxValue) {
-      val before = spark.sparkContext.getPersistentRDDs.size
+      val before = persistentIds
       val p = base.pinned(true)
       // localCheckpoint's signature: the pinned RDD itself is registered as
       // a persistent RDD (its blocks ARE the pin); the reliable path leaves
       // no persistent entry behind
-      assert(spark.sparkContext.getPersistentRDDs.size > before,
+      assert(addedSince(before).nonEmpty,
         "below the bound, auto must localCheckpoint (persistent RDD blocks)")
       assert(p.count() === 1000)
       p.unpersist(blocking = true)
@@ -136,13 +145,9 @@ class PinnedSpec extends SparkSpec {
 
   test("auto mode at the byte bound takes the reliable file path") {
     withAuto(1L) {
-      val before = spark.sparkContext.getPersistentRDDs.size
+      val before = persistentIds
       val p = base.pinned(true)
-      // <=, not ==: the contract is "this pin leaves NO NEW persistent
-      // entry"; a concurrent ContextCleaner reap of an EARLIER suite's
-      // GC'd localCheckpoint RDD can drop the count BELOW the snapshot
-      // (the same race the released-persist test hit in round 17)
-      assert(spark.sparkContext.getPersistentRDDs.size <= before,
+      assert(releasedSince(before),
         "above the bound, auto must file-checkpoint (no lingering persist)")
       val dir = spark.sparkContext.getCheckpointDir
       assert(dir.nonEmpty, "auto-reliable pin must establish a checkpoint dir")

@@ -14,19 +14,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // ",2" = tolerate one task retry, so ChaosSpec can inject first-attempt
-      // task failures; no other spec fails tasks, so behavior is unchanged.
-      .master("local[4,2]")
+    // ",2" = tolerate one task retry, so ChaosSpec can inject first-attempt
+    // task failures; no other spec fails tasks, so behavior is unchanged.
+    // No GraftSession.fromEnv: the suite's session ignores the shell's env.
+    val s = GraftSession.start(GraftSession.builder(master = "local[4,2]", shufflePartitions = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+        java.nio.file.Files.createTempDirectory("graft-wh").toString))
     graft.functions.GraftFunctions.register(s)
     s
   }

@@ -29,6 +29,7 @@ class BucketedJoinSpec extends SparkSpec {
       joined.collect()
       val p = joined.queryExecution.executedPlan.toString
       assert(!p.contains("Exchange hashpartitioning"), s"bucketed join still shuffles:\n$p")
+      assert(!p.contains("BroadcastExchange"), s"join broadcast, bucketed path not exercised:\n$p")
 
       // and the result matches the unbucketed join
       val o = Tables.orders(spark, sf())

@@ -52,6 +52,7 @@ class PlanSpec extends SparkSpec {
         df.collect()
         val p = df.queryExecution.executedPlan.toString
         assert(p.contains("ReusedExchange"), s"$q:\n$p")
+        assert(!p.contains("BroadcastExchange"), s"$q broadcast despite threshold -1:\n$p")
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }

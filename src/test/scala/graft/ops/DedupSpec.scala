@@ -226,20 +226,6 @@ class DedupSpec extends SparkSpec {
     assert(cut(4L)._2 == 0L, "unique doc uncut")
   }
 
-  test("duplicate spans: groupby shape == window shape on the corpus") {
-    // the skew-adjudication A/B switch (graft.spans.shape) must be
-    // result-invisible: both elections pick the same keep-first rows
-    def run(shape: String): Set[(Long, Long, Long, Long)] =
-      try {
-        spark.conf.set("graft.spans.shape", shape)
-        Dedup.duplicateSpans(docs).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      } finally spark.conf.unset("graft.spans.shape")
-    val w = run("window")
-    val g = run("groupby")
-    assert(w.nonEmpty && w == g)
-  }
-
   test("duplicate spans on the corpus: spans sane, non-overlapping, brute-force-confirmed") {
     import org.apache.spark.sql.functions._
     val spans = Dedup.duplicateSpans(docs).collect()

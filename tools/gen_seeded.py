@@ -113,12 +113,59 @@ def gcd(a, b):
     return a
 
 
+# time shift per unit of seed: 3 days + 1 hour, in microseconds
+SHIFT_US_PER_SEED = 3 * 86_400_000_000 + 3_600_000_000
+UNIT_US = {"s": 1_000_000, "ms": 1_000, "us": 1}
+# 0001-01-01T00:00:00 and 9999-12-31T23:59:59.999999 in epoch microseconds
+YEAR_1_US = -62_135_596_800_000_000
+YEAR_9999_END_US = 253_402_300_799_999_999
+INT64_MIN, INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def unit_delta(unit, shift_us):
+    """A microsecond shift in a timestamp column's own unit."""
+    return shift_us * 1000 if unit == "ns" else shift_us // UNIT_US[unit]
+
+
+def seed_range(tables):
+    """(lo, hi): the seeds whose time shift keeps every shifted timestamp in
+    years 1-9999 and inside int64 in its column's unit."""
+    lo, hi = None, None
+    for t, cols in TS_COLS.items():
+        for c in cols:
+            tbl = tables[t]
+            if c not in tbl.schema.names:
+                continue
+            typ = tbl.schema.field(c).type
+            if not pa.types.is_timestamp(typ):
+                continue
+            raw = tbl.column(c).cast(pa.int64())
+            mm = pc.min_max(raw).as_py()
+            if mm["min"] is None:
+                continue
+            if typ.unit == "ns":
+                # years 1 and 9999 lie outside int64 in nanoseconds: int64 binds
+                floor, ceil = INT64_MIN, INT64_MAX
+            else:
+                floor, ceil = YEAR_1_US // UNIT_US[typ.unit], YEAR_9999_END_US // UNIT_US[typ.unit]
+            step = unit_delta(typ.unit, SHIFT_US_PER_SEED)  # exact: the shift is whole seconds
+            c_lo = -((mm["min"] - floor) // step)
+            c_hi = (ceil - mm["max"]) // step
+            lo = c_lo if lo is None else max(lo, c_lo)
+            hi = c_hi if hi is None else min(hi, c_hi)
+    return lo, hi
+
+
 def main():
-    os.makedirs(DST, exist_ok=True)
     tables = {}
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
         tables[t] = pq.read_table(f"{SRC}/{t}.parquet")
+    lo, hi = seed_range(tables)
+    if lo is not None and not lo <= SEED <= hi:
+        sys.exit(f"gen_seeded: seed {SEED} shifts timestamps out of years 1-9999; "
+                 f"valid seeds for {SRC} are {lo}..{hi} (largest valid seed: {hi})")
+    os.makedirs(DST, exist_ok=True)
 
     # key permutations WITHIN the group's distinct-value set: rank i's value
     # maps to rank (a*i + b) mod m's value — value set (and hence every
@@ -158,10 +205,11 @@ def main():
         i = tbl.schema.get_field_index("p_size")
         tables["part"] = tbl.set_column(
             i, tbl.schema.field(i),
-            pc.add(tbl.column("p_size"), pa.scalar(SEED % 5, pa.int32())).cast(tbl.schema.field(i).type))
+            pc.add_checked(tbl.column("p_size"), pa.scalar(SEED % 5, pa.int32()))
+            .cast(tbl.schema.field(i).type))
 
-    # time shift: seed*3 days + seed hours
-    shift_us = SEED * 3 * 86_400_000_000 + SEED * 3_600_000_000
+    # time shift: seed*3 days + seed hours (seed_range bounds the result)
+    shift_us = SEED * SHIFT_US_PER_SEED
     for t, cols in TS_COLS.items():
         for c in cols:
             tbl = tables[t]
@@ -170,11 +218,9 @@ def main():
             i = tbl.schema.get_field_index(c)
             typ = tbl.schema.field(i).type
             if pa.types.is_timestamp(typ):
-                unit = typ.unit
-                mult = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": 1}[unit]
-                delta = shift_us // mult if unit != "ns" else shift_us * 1000
                 raw = tbl.column(c).cast(pa.int64())
-                shifted = pc.add(raw, pa.scalar(delta, pa.int64())).cast(typ)
+                delta = pa.scalar(unit_delta(typ.unit, shift_us), pa.int64())
+                shifted = pc.add_checked(raw, delta).cast(typ)
                 tables[t] = tbl.set_column(i, tbl.schema.field(i), shifted)
 
     # text re-draw: seeded Caesar (bijective -> cluster structure preserved)

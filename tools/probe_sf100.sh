@@ -20,14 +20,12 @@
 # Round-13 default list: the round-12 additions that had no quiet-rig sf100
 # point (unigram train/encode, the gtable facade's running-window path), the
 # SemDeDup two-level assignment (its round-12 number was flat-path under
-# concurrent load; A/B the flat path in the same session with
-# SPARK_GRAFT_SEM_FORCE_FLAT=1), and three carried linearity sentinels.
+# concurrent load), and three carried linearity sentinels.
 #
 # Round 14: shuffle partitions are NO LONGER set here — Bench sizes them
 # from the fixture bytes (GraftSession.shufflePartitionsFor: ~470 for
 # sf100's 15 GB), which is the knob-free reproduction of the r13
-# q_gtable_running spill adjudication. SPARK_GRAFT_SHUFFLE_PARTITIONS
-# remains available for explicit A/B only.
+# q_gtable_running spill adjudication.
 set -e
 cd /root/repo
 OUT=${1:-bench_sf100_probe.json}

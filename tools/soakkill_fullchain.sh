@@ -53,8 +53,8 @@ run_one() { # $1=log $2=kill(0/1)
     ASSASSIN=$!
   fi
   t0=$(date +%s)
-  # SPARK_GRAFT_LOG_DAG=1: StreamBench logs at ERROR by default, which
-  # swallows the Lost-executor/recovery lines this evidence needs
+  # SPARK_GRAFT_LOG_DAG=1: the "Resubmitting" stage-recompute lines this
+  # evidence needs are DAGScheduler INFO lines, below the WARN root level
   SPARK_GRAFT_MASTER="$MASTER" SPARK_SCALA_VERSION=2.13 \
     SPARK_GRAFT_LOG_DAG=1 \
     SPARK_GRAFT_EXECUTOR_MEM=12g SPARK_GRAFT_ROCKSDB="$ROCKSDB" \
