@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Conditional scan fan-out (optimization guide §2.5 "input skew: one huge
   * unsplittable file … repartition immediately after the read", §6 input
@@ -26,7 +30,8 @@ object Spread {
     * scan provides fewer partitions than that.
     *
     * CONTRACT: call only on a frame rooted directly at a scan (or another
-    * already-materialized source). Probing the partition count requires
+    * already-materialized source); `fan` fails fast otherwise (see
+    * [[scanRooted]]). Probing the partition count requires
     * physically planning `df` once on the driver, and the count read is the
     * PRE-AQE one — both fine for a scan root (planning a scan is cheap and
     * its split count is final), but a mid-pipeline fan would pay a full
@@ -47,6 +52,8 @@ object Spread {
     * OPTIMIZATION_r17.md and OPTIMIZATION_r18.md.
     */
   def fan(df: DataFrame, key: Column, minBytes: Long = 0L): DataFrame = {
+    require(scanRooted(df.queryExecution.optimizedPlan),
+      s"Spread.fan needs a frame rooted at a scan, got:\n${df.queryExecution.optimizedPlan}")
     if (minBytes > 0) {
       val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
       if (est < minBytes) return df
@@ -54,5 +61,16 @@ object Spread {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val scanParts = df.queryExecution.toRdd.getNumPartitions
     if (scanParts < cores) df.repartition(cores, key) else df
+  }
+
+  /** True when `plan` is only projections and filters (plus the
+    * `Tables.chaos` map-partitions wrapper) over a scan, a checkpointed or
+    * cached frame, or a local relation.
+    */
+  private def scanRooted(plan: LogicalPlan): Boolean = plan match {
+    case _: LogicalRelation | _: LogicalRDD | _: InMemoryRelation | _: LocalRelation => true
+    case _: Project | _: Filter | _: SerializeFromObject | _: MapPartitions |
+        _: DeserializeToObject => scanRooted(plan.children.head)
+    case _ => false
   }
 }

@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -10,6 +17,21 @@ import org.apache.spark.sql.functions._
   * trusting the parquet footer schema — Catalyst prunes columns and pushes
   * filters into the scan, so loading "the whole table" is free until an
   * action touches it.
+  *
+  * Each session resolves a table file once. The first [[load]] of a file
+  * runs `spark.read.parquet` (data-source lookup, file listing and the
+  * schema-inference job) and keeps the resolved `BaseRelation`, keyed by the
+  * file's (qualified path, length, modification time) from one
+  * `getFileStatus`; later loads build their frame from that relation with
+  * `baseRelationToDataFrame`, which is where `spark.read` ends too. Each
+  * call therefore gets fresh attribute ids, so two loads of one table in a
+  * self-join stay unambiguous, and a rewritten file (new length or mtime) is
+  * resolved again. [[GraftSession.tune]] runs before every load, so the
+  * confs inference reads (`nanosAsLong`) are the same on every call. The
+  * relations are per session (a `newSession()` resolves its own) and are
+  * dropped when the session's SparkContext stops; a relation holds its
+  * session, so a weak map keyed by the session would never free them.
+  * [[chaos]] and the `events` time columns are applied per call.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +40,34 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     GraftSession.tune(spark)
-    chaos(spark.read.parquet(s"$dir/$name.parquet"))
+    chaos(spark.baseRelationToDataFrame(relation(spark, s"$dir/$name.parquet")))
+  }
+
+  private case class FileKey(path: String, length: Long, mtime: Long)
+
+  private type Relations = ConcurrentHashMap[FileKey, BaseRelation]
+
+  /** Resolved relations per live SparkContext, then per session. */
+  private val catalogs = new ConcurrentHashMap[SparkContext, ConcurrentHashMap[SparkSession, Relations]]()
+
+  private def relations(spark: SparkSession): Relations =
+    catalogs.computeIfAbsent(spark.sparkContext, { sc =>
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = catalogs.remove(sc)
+      })
+      new ConcurrentHashMap[SparkSession, Relations]()
+    }).computeIfAbsent(spark, _ => new Relations())
+
+  private def relation(spark: SparkSession, file: String): BaseRelation = {
+    val p = new Path(file)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    relations(spark).computeIfAbsent(
+      FileKey(st.getPath.toString, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(file).queryExecution.analyzed match {
+        case l: LogicalRelation => l.relation
+        case other => throw new IllegalStateException(
+          s"$file did not resolve to a file-source relation:\n$other")
+      })
   }
 
   /** Fault-injection harness for retry-determinism evidence: with
@@ -70,7 +119,7 @@ object Tables {
     * window()/session_window() operators.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampType}
+    import org.apache.spark.sql.types.LongType
     val raw = load(spark, dir, "events")
     // The generator has shipped `ts` both as TIMESTAMP(NANOS) (read as
     // LongType epoch-nanos under nanosAsLong) and as TIMESTAMP(MICROS)
@@ -78,14 +127,16 @@ object Tables {
     // LongType — before deriving `__time__`. Session timeZone is UTC
     // (GraftSession), so the NTZ→TIMESTAMP cast is a micros-identity.
     val tsNanos = raw.schema("ts").dataType match {
-      case LongType => col("ts")
-      case _ => unix_micros(col("ts").cast(TimestampType)) * lit(1000L)
+      case LongType => "ts"
+      case _ => "unix_micros(cast(ts as timestamp)) * 1000L"
     }
-    raw.withColumn("ts", tsNanos)
-      // Integer division — `/` on longs promotes to double, which cannot
-      // represent 1.7e18 nanos exactly (53-bit mantissa) and would corrupt ms.
-      .withColumn("__time__", expr("ts div 1000000"))
-      .withColumn("ts_t", timestamp_millis(col("__time__")))
+    // Integer division — `/` on longs promotes to double, which cannot
+    // represent 1.7e18 nanos exactly (53-bit mantissa) and would corrupt ms.
+    val ms = s"($tsNanos) div 1000000"
+    // One projection, so the frame is analyzed once rather than per column.
+    // (ListMap keeps this column order.)
+    raw.withColumns(scala.collection.immutable.ListMap(
+      "ts" -> expr(tsNanos), "__time__" -> expr(ms), "ts_t" -> timestamp_millis(expr(ms))))
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

@@ -345,6 +345,7 @@ object DeepAnalytics {
     * integers (`div`, non-negative) so partition order cannot move it.
     */
   def dailyRevenueMa(spark: SparkSession, dir: String): DataFrame = {
+    // Global window bound: calendar (one row per order day).
     val w = Window.orderBy(col("day")).rangeBetween(-6, 0)
     Tables.orders(spark, dir)
       .groupBy(expr("cast(datediff(o_orderdate, date'1992-01-01') as long)").as("day"))

@@ -997,7 +997,10 @@ case class SortedSetHits(child: Expression, set: Array[Long])
   * interpreted `aggregate` HOF paid a boxed lambda + closure dispatch per
   * element per row — measured 53× the native traversal cost at 2M×64 dims
   * (MicroBench `vec16`). Input must be null-free and NaN-free (embedding
-  * vectors); empty array → 0.0 like the empty fold.
+  * vectors). An empty array gives 0.0, and so does the SQL spelling:
+  * there `array_min` and `lo` are NULL, but `greatest` skips the NULL
+  * (scale = 1e-12) and the fold returns its 0.0 start without calling the
+  * lambda (ExpressionsSpec checks the empty edge without a `coalesce`).
   */
 case class Int8MseSum(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {

@@ -455,6 +455,8 @@ object Behavior {
     // value-domain window per metric, one broadcast row out
     def cuts(metric: String): DataFrame = {
       val h = base.groupBy(col(metric).as("val")).agg(count(lit(1)).as("c"))
+      // Global window bound: corpus-growing (distinct values of the metric);
+      // a single-partition stage, see ROADMAP direction 3.
       val wv = Window.orderBy(col("val"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = h.agg(sum(col("c")).as("n"))
@@ -532,6 +534,7 @@ object Behavior {
     val dau = d.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val firsts = d.groupBy(col("user_id")).agg(min(col("day")).as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("new_users"))
+    // Global window bound: calendar (one row per active day).
     val w = Window.orderBy(col("day")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     dau.join(firsts, Seq("day"), "left")
       .withColumn("new_users", coalesce(col("new_users"), lit(0L)))

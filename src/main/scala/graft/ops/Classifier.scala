@@ -138,8 +138,9 @@ object Classifier {
     * tie-corrected AUC (Mann-Whitney), all in integer micro-units computed
     * with pure BIGINT arithmetic (2·rank_avg of a tie group = min+max of its
     * dense row_numbers, so no floating ranks cross the engine boundary).
-    * The rank window runs over the HELD-OUT fold only — eval-set-sized, not
-    * corpus-sized, so the single-partition sort is bounded by design.
+    * The rank window runs over the HELD-OUT fold only — eval-set-sized, but
+    * that fold is a fixed share of the corpus, so the single-partition sort
+    * still grows with it.
     */
   def classifierEval(docs: DataFrame, positives: Seq[String] = CuratedSources,
       maxRounds: Int = MaxRounds, epsE6: Long = EpsE6, lr: Double = LearnRate): DataFrame = {
@@ -150,6 +151,8 @@ object Classifier {
     val z = lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2") + lit(w(3)) * col("x3")
     val p = least(lit(1.0), greatest(lit(0.0), lit(0.5) + z / lit(4.0)))
     val sc = fte.select(col("doc_id"), col("y"), p.as("p"))
+    // Global window bound: corpus-growing (the held-out fold is 1/EvalFold of
+    // the documents); a single-partition stage, see ROADMAP direction 3.
     val wOrd = org.apache.spark.sql.expressions.Window.orderBy(col("p"), col("doc_id"))
     val byP = org.apache.spark.sql.expressions.Window.partitionBy(col("p"))
     val nTrain = ftr.count()

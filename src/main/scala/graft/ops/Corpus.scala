@@ -375,6 +375,7 @@ object Corpus {
     // rows (bounded by construction, not corpus-sized); cumulative coverage
     // at ranks ≤ k only ever sums top-k counts, so the trim is exact.
     val top = tf.orderBy(col("n").desc, col("term")).limit(topK)
+    // Global window bound: top-k (topK rows after the limit), here and below.
     val w = Window.orderBy(col("n").desc, col("term"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     top.crossJoin(broadcast(total))

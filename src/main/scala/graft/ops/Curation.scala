@@ -452,7 +452,8 @@ object Curation {
       .pinned(false) // feeds class totals, global dist, and the grid
     val cls = cc.groupBy(qiCols.map(col): _*).agg(sum(col("n")).as("n_c"))
     val gw = cc.groupBy(col("p")).agg(sum(col("n")).as("ng"))
-      .withColumn("cumg", sum(col("ng")).over(Window.orderBy(col("p")))) // m rows
+      // Global window bound: priority (m = distinct o_orderpriority values).
+      .withColumn("cumg", sum(col("ng")).over(Window.orderBy(col("p"))))
     val tot = gw.agg(sum(col("ng")).as("gtot"), count(lit(1)).as("mdom")) // 1 row
     val grid = cls.crossJoin(broadcast(gw.select(col("p"), col("cumg"))))
       .join(cc, qiCols :+ "p", "left")

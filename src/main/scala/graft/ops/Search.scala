@@ -44,6 +44,7 @@ object Search {
       .select(col("vec_id"), GraftFunctions.dot(col("nv"), col("qv")).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(RrfListK)
+    // Global window bound: top-k (RrfListK rows after the limit).
     val wsem = Window.orderBy(col("cos").desc, col("vec_id"))
     val sem = semTop.withColumn("rs", row_number().over(wsem).cast("long"))
       .select(col("vec_id").as("doc_id"), col("rs"))
@@ -53,6 +54,7 @@ object Search {
           + coalesce(lit(1.0) / (lit(RrfK) + col("rs")), lit(0.0)), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(RrfTopK)
+    // Global window bound: top-k (RrfTopK rows after the limit).
     val w = Window.orderBy(col("score").desc, col("doc_id"))
     fused.withColumn("rank", row_number().over(w).cast("long"))
   }

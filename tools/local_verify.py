@@ -35,7 +35,8 @@ def canon(df: pd.DataFrame) -> str:
 
 def main():
     if os.environ.get("SKIP_SPARK") != "1":
-        r = subprocess.run(["bash", "tools/run_verify.sh", "graft.Verify", SFDIR, OUTDIR],
+        runner = os.path.join(os.path.dirname(os.path.abspath(__file__)), "run_verify.sh")
+        r = subprocess.run(["bash", runner, "graft.Verify", SFDIR, OUTDIR],
                            capture_output=True, text=True)
         sys.stdout.write(r.stdout[-3000:])
         sys.stderr.write(r.stderr[-5000:])

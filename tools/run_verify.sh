@@ -2,7 +2,7 @@
 # Local runner for graft.Verify / graft.Bench without sbt startup cost.
 # Usage: tools/run_verify.sh <MainClass> [args...]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
