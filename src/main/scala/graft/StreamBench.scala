@@ -1,313 +1,64 @@
 package graft
 
-import graft.sources.Sources
-import graft.streaming.{CorpusIngest, StreamWindows}
+import graft.streaming.CorpusIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Streaming throughput micro-benchmark. Prints one JSON line with rows/sec.
-  * Not part of the driver's Bench contract — run manually:
+/** Full admission-chain streaming soak ([[runSoakFullChain]]). Prints one
+  * JSON line per micro-batch of state telemetry, a plateau verdict per
+  * query, the closed-form law line and a rows/sec line. Not part of the
+  * driver's Bench contract; run manually:
   *
-  *   tools/run_verify.sh graft.StreamBench \
-  *     [memory|file|ingest|admit|cdc|soak|soak_over|soak_scd2] [nRows] [batchRows]
+  *   tools/run_verify.sh graft.StreamBench soak_fullchain [nRows] [batchRows]
   *
-  * Two ingest shapes for the same query (hopping 1h/30m window sum — the
-  * reference's flagship load, README.md:59-131):
-  *
-  *   - `memory`: MemoryStream micro-batches. Rows are encoded one-by-one on
-  *     the driver, so this measures a single-threaded-ingest FLOOR.
-  *   - `file`: a pre-written multi-file parquet directory consumed with
-  *     `maxFilesPerTrigger`, the local stand-in for partitioned sources
-  *     (Kafka): each micro-batch scans its files with all cores, so ingest
-  *     parallelizes and the stateful operator becomes the bottleneck.
-  *
-  * `ingest` drives the corpus-ingest chain (quality gate -> watermarked
-  * exact dedup -> windowed admission stats, CorpusIngest.pipeline) over the
-  * file shape with synthetic documents at a 90% duplicate / ~8% junk mix —
-  * the throughput of three chained operators incl. tokenize+score, two
-  * state stores, and the nondeterministic gate pin. `admit` upgrades the
-  * chain to the full NEAR-dedup admission (CorpusIngest.admittedDocs:
-  * banded minhash stateful op + per-doc verdict agg on top of gate+exact
-  * dedup) — the per-doc signature compute and third state store price the
-  * near-dup capability against the `ingest` row. `cdc` drives the
-  * changelog-compaction stream (CdcStream.latestSnapshotStream, update-mode
-  * max_by state over 50k entities) with a foreachBatch count sink, measuring
-  * the engine-side snapshot throughput; the JDBC upsert half is spec'd
-  * end-to-end in CdcStreamSpec and bounded by the target DB, not the engine.
+  * `nRows` (default 1,000,000) must be at least [[MinRows]] and `batchRows`
+  * (rows per pre-written chunk, default 100,000) positive; any other command
+  * line prints the usage and exits 2 before a session starts.
+  * `tools/soakkill_fullchain.sh` runs it under local-cluster and kills one
+  * executor mid-run. Streaming throughput and latency are measured by
+  * `perfbench`'s `stream_window`.
   *
   * Env: the session env GraftSession reads (SPARK_GRAFT_CPUS sets cores and
-  * shuffle partitions); SPARK_GRAFT_ROCKSDB=1 swaps HDFS-backed state for
-  * RocksDB, measuring the large-state configuration recommended at 100 TB
-  * key cardinalities.
+  * shuffle partitions; SPARK_GRAFT_MASTER=local-cluster[...] runs the
+  * stateful operators across separate executor JVMs, with real state-store
+  * serialization and shuffle transport); SPARK_GRAFT_ROCKSDB=1 swaps
+  * HDFS-backed state for RocksDB.
   */
 object StreamBench {
-  case class E(ts: java.sql.Timestamp, key: Long, value: Double)
+  private val Epoch = 1700000000000L // ms; event time advances 3 ms/row
 
-  private val Epoch = 1700000000000L // ms; event time advances 3.6 ms/row
+  /** Smallest feed the soak accepts. */
+  val MinRows = 400000
 
-  /** Distributed generator — same rows as `batch` but built by executors. */
-  private def eventsDf(spark: SparkSession, from: Long, n: Long): DataFrame =
-    spark.range(from, from + n).select(
-      timestamp_millis(lit(Epoch) + (col("id") * 3600L / 1000L).cast("long")).as("ts"),
-      (col("id") % 200).as("key"),
-      ((col("id") % 997) * 0.5).as("value"))
+  private val Usage =
+    s"usage: graft.StreamBench soak_fullchain [nRows >= $MinRows, default 1000000] " +
+      "[batchRows > 0, default 100000]"
+
+  /** (nRows, batchRows) of a valid command line, None for any other. */
+  private[graft] def parseArgs(args: Seq[String]): Option[(Int, Int)] = {
+    def num(i: Int, default: Int) = args.lift(i).fold(Option(default))(_.toIntOption)
+    for {
+      mode <- args.headOption if mode == "soak_fullchain" && args.length <= 3
+      rows <- num(1, 1000000) if rows >= MinRows
+      batch <- num(2, 100000) if batch > 0
+    } yield (rows, batch)
+  }
 
   def main(args: Array[String]): Unit = {
-    val mode = if (args.nonEmpty && !args(0).forall(_.isDigit)) args(0) else "memory"
-    val numArgs = args.dropWhile(a => !a.forall(_.isDigit))
-    val total = if (numArgs.nonEmpty) numArgs(0).toInt else 1000000
-    val batchSize = if (numArgs.length > 1) numArgs(1).toInt else 100000
-    val cpus = GraftSession.cpus
+    val (total, batchSize) = parseArgs(args.toSeq).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val rocksdb = sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,8192] (read by GraftSession):
-    // the soak's stateful operators run across separate executor JVMs (real
-    // state-store serialization + shuffle transport) — the Verify multi-JVM mode.
     val spark = GraftSession.start(GraftSession.fromEnv(
       GraftSession.builder(rocksDbStateStore = rocksdb)))
-
-    val (rows, secs) = mode match {
-      case "file"   => runFile(spark, total, batchSize, cpus)
-      case "ingest" => runIngest(spark, total, batchSize, cpus)
-      case "admit"  => runAdmit(spark, total, batchSize, cpus)
-      case "cdc"    => runCdc(spark, total, batchSize)
-      case "soak"   => runSoak(spark, total, batchSize, cpus)
-      case "soak_over" => runSoakOver(spark, total, batchSize, cpus)
-      case "soak_scd2" => runSoakScd2(spark, total, batchSize, cpus)
-      case "soak_semdedup" => runSoakSemDedup(spark, total, batchSize, cpus)
-      case "soak_semhandover" => runSoakSemHandover(spark, total, batchSize, cpus)
-      case "soak_fullchain" => runSoakFullChain(spark, total, batchSize, cpus)
-      case _        => runMemory(spark, total, batchSize)
-    }
-    val rps = rows / secs
-    println(f"""{"metric":"stream_rows_per_sec","value":$rps%.0f,"unit":"rows/sec","mode":"$mode","stateStore":"${if (rocksdb) "rocksdb" else "hdfs"}","rows":$rows,"secs":$secs%.3f}""")
+    val secs = runSoakFullChain(spark, total, batchSize, GraftSession.cpus)
+    val rps = total / secs
+    println(f"""{"metric":"stream_rows_per_sec","value":$rps%.0f,"unit":"rows/sec","mode":"soak_fullchain","stateStore":"${if (rocksdb) "rocksdb" else "hdfs"}","rows":$total,"secs":$secs%.3f}""")
     spark.stop()
   }
 
-  case class C(key: Long, event_id: Long, value: Double, ts_ms: Long)
-
-  /** Changelog-compaction throughput: update-mode max_by snapshot over 50k
-    * entities; per micro-batch the sink counts the updated-key rows (a cheap
-    * full execution of the stateful plan, no external system).
-    */
-  private def runCdc(spark: SparkSession, total: Int, batchSize: Int): (Long, Double) = {
-    import spark.implicits._
-    val src = Sources.memoryStream[C](spark)
-    val snap = graft.streaming.CdcStream.latestSnapshotStream(
-      src.toDS().toDF(), Seq("key"), Seq("ts_ms", "event_id"))
-    val emitted = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = snap.writeStream.outputMode("update")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        emitted.addAndGet(b.count()): Unit
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("sb-cdc").toString)
-      .start()
-
-    def batch(from: Int, n: Int): Seq[C] =
-      (from until from + n).map(i =>
-        C((i % 50000).toLong, i.toLong, (i % 997) * 0.5, Epoch + i.toLong))
-
-    src.addData(batch(0, batchSize)); q.processAllAvailable() // warm-up
-    val chunks = Iterator.iterate(batchSize)(_ + batchSize).takeWhile(_ < total)
-      .map(from => batch(from, math.min(batchSize, total - from))).toVector
-    val t0 = System.nanoTime()
-    chunks.foreach { c => src.addData(c); q.processAllAvailable() }
-    val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    (chunks.map(_.size.toLong).sum, secs)
-  }
-
-  private def windowedSum(events: DataFrame): DataFrame =
-    StreamWindows.slide(
-      events, "ts", "1 hour", "30 minutes", Seq("key"),
-      Seq(count(lit(1)).as("n"), sum(col("value")).as("s")),
-      watermark = "10 seconds")
-
-  private def runMemory(spark: SparkSession, total: Int, batchSize: Int): (Long, Double) = {
-    import spark.implicits._
-    val src = Sources.memoryStream[E](spark)
-    val q = windowedSum(src.toDS().toDF()).writeStream.format("memory")
-      .queryName("sb").outputMode("append").start()
-
-    def batch(from: Int, n: Int): Seq[E] =
-      (from until from + n).map { i =>
-        E(new java.sql.Timestamp(Epoch + i.toLong * 3600L / 1000),
-          (i % 200).toLong, (i % 997) * 0.5)
-      }
-
-    // warm-up
-    src.addData(batch(0, batchSize)); q.processAllAvailable()
-
-    // pre-build chunks OUTSIDE the timer — measure the engine, not the
-    // driver-side synthetic generator
-    val chunks = Iterator.iterate(batchSize)(_ + batchSize).takeWhile(_ < total)
-      .map(from => batch(from, math.min(batchSize, total - from))).toVector
-    val t0 = System.nanoTime()
-    var sent = batchSize
-    chunks.foreach { c =>
-      src.addData(c)
-      q.processAllAvailable() // one micro-batch per chunk — real streaming cadence
-      sent += c.size
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    (sent.toLong - batchSize, secs)
-  }
-
-  /** Synthetic document feed, built by executors: groups of 10 share one text
-    * (so watermark-bounded dedup admits ~1 in 10), every 13th is a short
-    * stopword-free doc the quality gate drops, 8 sources, event time 10
-    * ms/doc.
-    */
-  private def corpusDf(spark: SparkSession, from: Long, n: Long): DataFrame =
-    spark.range(from, from + n).select(
-      timestamp_millis(lit(Epoch) + col("id") * 10L).as("ts"),
-      col("id").as("doc_id"),
-      concat(lit("src"), pmod(col("id"), lit(8))).as("source"),
-      expr(
-        """case when id % 13 = 0 then 'zz qq xx'
-          |else concat('the quick brown fox number ', cast(id div 10 as string),
-          |  ' jumps over the lazy dog and the cat sleeps in the warm sun',
-          |  ' while the dog watches batch ', cast(id div 10 as string),
-          |  ' of the day and is in a good mood to run for a while longer')
-          |end""".stripMargin).as("text"))
-
-  /** The corpus-ingest chain over the partitioned-file shape. */
-  private def runIngest(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    val dir = java.nio.file.Files.createTempDirectory("streambench-ingest").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    var from = 0L
-    while (from < total) {
-      val n = math.min(batchSize.toLong, total - from)
-      corpusDf(spark, from, n).repartition(filesPerChunk)
-        .write.mode("append").parquet(dir)
-      from += n
-    }
-    val schema = corpusDf(spark, 0, 1).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerChunk)
-      .option("latestFirst", "false")
-      .parquet(dir)
-    val t0 = System.nanoTime()
-    val q = CorpusIngest.pipeline(src, "10 seconds", "1 minute")
-      .writeStream.format("memory").queryName("sbi").outputMode("append").start()
-    q.processAllAvailable()
-    val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    (total.toLong, secs)
-  }
-
-  /** The FULL admission chain (quality gate -> watermarked exact dedup ->
-    * banded near-dedup admission, `CorpusIngest.admittedDocs` — three
-    * chained stateful operators incl. 16 minhashes + sorted shingle hashes
-    * per doc) over the partitioned-file shape. The heavier per-doc compute
-    * and the extra state stores price the near-dedup upgrade over `ingest`.
-    */
-  private def runAdmit(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    // SPARK_GRAFT_DECONTAM=n adds the decontamination stage with an
-    // n-entry SYNTHETIC benchmark set (hashes absent from the corpus):
-    // every doc pays the full per-shingle binary-search probe but none is
-    // cut, so the row prices the stage's pure overhead at a chosen eval-
-    // suite size without changing what flows into the downstream stores.
-    // Spellings: a literal entry count, or "1m"/"default" for the typical
-    // 10⁶-shingle suite (a distinct sentinel, so every integer means
-    // itself — round-15 advice); the broadcast CONTRACT ceiling is 10⁷
-    // (Curation.benchmarkShingleSet scaladoc) —
-    // `SPARK_GRAFT_DECONTAM=10000000` prices that ceiling.
-    val bench: Array[Long] = sys.env.get("SPARK_GRAFT_DECONTAM") match {
-      case None => Array.empty
-      case Some(v) =>
-        val n = v.trim.toLowerCase match {
-          case "1m" | "default" => 1000000
-          case s if s.nonEmpty && s.forall(_.isDigit) =>
-            // '1' used to be the 10^6 sentinel (pre round-16); a literal
-            // 1-entry "suite" measures nothing, so tiny counts are far more
-            // likely a stale script than an intent — fail loudly instead of
-            // quietly pricing an empty probe (r16 advice)
-            val n = s.toInt
-            require(n >= 1000,
-              s"SPARK_GRAFT_DECONTAM=$s: literal entry counts below 1000 are " +
-                "rejected (a benchmark set that small prices nothing, and '1' " +
-                "was the old 10^6 sentinel — spell that '1m' or 'default')")
-            n
-          case other => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_DECONTAM must be an entry count or '1m'/'default', got '$other'")
-        }
-        (0 until n).map(i =>
-          graft.functions.Determinism.md5Long(s"bench_$i")).sorted.toArray
-    }
-    val dir = java.nio.file.Files.createTempDirectory("streambench-admit").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    var from = 0L
-    while (from < total) {
-      val n = math.min(batchSize.toLong, total - from)
-      corpusDf(spark, from, n).repartition(filesPerChunk)
-        .write.mode("append").parquet(dir)
-      from += n
-    }
-    val schema = corpusDf(spark, 0, 1).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerChunk)
-      .option("latestFirst", "false")
-      .parquet(dir)
-    val t0 = System.nanoTime()
-    val q = CorpusIngest.admittedDocs(src, "10 seconds", benchShingles = bench)
-      .writeStream.format("memory").queryName("sba").outputMode("append").start()
-    q.processAllAvailable()
-    val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    (total.toLong, secs)
-  }
-
-  /** State-growth soak (round-10): the `admit` chain run long (10× the
-    * recorded bench length) with per-batch state-store telemetry, proving
-    * watermark eviction BOUNDS state — the property that decides whether
-    * the admission chain survives an unbounded stream. Emits one JSON line
-    * per micro-batch (input rows, per-operator state rows, state bytes —
-    * RocksDB SST sizes included via custom metrics when that store is on)
-    * before the rows/sec summary, then a `soak_verdict` line comparing peak
-    * state over the middle vs final third of the run: flat (ratio ≈ 1) =
-    * eviction holds; monotone growth = a leak. Parquet sink, not memory —
-    * 20M admitted rows must not accumulate in driver heap.
-    */
-  private def runSoak(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-    val dir = java.nio.file.Files.createTempDirectory("streambench-soak").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    var from = 0L
-    while (from < total) {
-      val n = math.min(batchSize.toLong, total - from)
-      corpusDf(spark, from, n).repartition(filesPerChunk)
-        .write.mode("append").parquet(dir)
-      from += n
-    }
-    val schema = corpusDf(spark, 0, 1).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerChunk)
-      .option("latestFirst", "false")
-      .parquet(dir)
-    val outDir = java.nio.file.Files.createTempDirectory("streambench-soak-out").toString
-    val t0 = System.nanoTime()
-    val q = CorpusIngest.admittedDocs(src, "10 seconds")
-      .writeStream.format("parquet").option("path", outDir)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("streambench-soak-ckp").toString)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    val secs = (System.nanoTime() - t0) / 1e9
-    if (sys.env.get("SPARK_GRAFT_SOAK_EXPLAIN").contains("1")) q.explain(extended = true)
-    val progress = q.recentProgress.toSeq
-    q.stop()
-    soakReport(progress)
-    (total.toLong, secs)
-  }
-
-  /** Shared soak telemetry: one JSON line per micro-batch (input rows,
+  /** Soak telemetry, per query: one JSON line per micro-batch (input rows,
     * per-operator state rows/bytes), then the plateau verdict comparing
     * peak state over the middle vs final third of the run — bounded stores
     * plateau after warm-up, leaks keep climbing. Judged on BOTH row counts
@@ -354,430 +105,11 @@ object StreamBench {
     }
   }
 
-  /** Over-window state soak (round-11): `OverWindows.byDuration` over a
-    * CHURNING key space — each key lives for `SoakKeyLife` consecutive
-    * rows then never returns, so bounded state depends on the idle-GC
-    * eviction-timeout path, the one branch the admit soak does not
-    * exercise (its dedup keys are re-hit continuously). A deterministic
-    * per-row jitter inside the watermark keeps the reorder buffer
-    * non-trivially draining every batch. Live state at any instant ≈ keys
-    * within (watermark delay + frame + jitter) of the stream head —
-    * constant in stream length; the plateau verdict proves it.
+  /** Query 2's cosine threshold: the two survivors of one semantic family
+    * share a direction (cosine 1), while two distinct 64-dim hash directions
+    * cross 0.9 with probability ~4e-23 per pair.
     */
-  private def runSoakOver(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-    val dir = java.nio.file.Files.createTempDirectory("streambench-soakover").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    // key churns every SoakKeyLife rows; event time advances 3 ms/row with
-    // a jitter of up to 1.5 s — inside the 2 s watermark, so nothing is
-    // late but every batch carries genuine disorder
-    def overDf(from: Long, n: Long): DataFrame =
-      spark.range(from, from + n).select(
-        (col("id") / SoakKeyLife).cast("long").as("key"),
-        (lit(Epoch) + col("id") * 3L - pmod(col("id") * 2654435761L, lit(1500L))).as("time"),
-        (col("id") % 997).cast("double").as("value"))
-    var from = 0L
-    while (from < total) {
-      val n = math.min(batchSize.toLong, total - from)
-      overDf(from, n).repartition(filesPerChunk).write.mode("append").parquet(dir)
-      from += n
-    }
-    val src = spark.readStream.schema(overDf(0, 1).schema)
-      .option("maxFilesPerTrigger", filesPerChunk)
-      .option("latestFirst", "false")
-      .parquet(dir)
-      .as[graft.streaming.OverWindows.Event]
-    val outDir = java.nio.file.Files.createTempDirectory("streambench-soakover-out").toString
-    val t0 = System.nanoTime()
-    val q = graft.streaming.OverWindows.byDuration(src, sizeMs = 5000, watermarkDelay = "2 seconds")
-      .writeStream.format("parquet").option("path", outDir)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("streambench-soakover-ckp").toString)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val progress = q.recentProgress.toSeq
-    q.stop()
-    soakReport(progress)
-    // every matured row emits exactly once: rows still pending at shutdown
-    // are the watermark-horizon tail, which must be batch-sized, not
-    // stream-sized
-    val emitted = spark.read.parquet(outDir).count()
-    println(s"""{"soak_over_emitted":$emitted,"input_total":$total,"pending_tail":${total - emitted}}""")
-    (total.toLong, secs)
-  }
-
-  /** Rows per key in the churning over-window soak. */
-  val SoakKeyLife = 50L
-
-  /** Entities in the SCD-2 soak — fixed, so change history per entity grows
-    * with the run and the plateau verdict tests the O(rate × delay) suffix
-    * claim (Scd2Stream scaladoc), not a churning key space. */
-  val Scd2Entities = 20000L
-
-  /** SCD-2 interval-maintenance soak (round-13): millions of changes over a
-    * bounded entity set with in-watermark disorder (up to 1.5 s jitter under
-    * a 2 s delay — every batch reorders, nothing drops). Three verdicts:
-    *
-    *   - plateau: per-entity state is the version-list suffix still mutable
-    *     under the watermark, O(change rate × watermark delay) + 1 — with a
-    *     FIXED entity set, state rows must flatline near `Scd2Entities`
-    *     regardless of how much history accumulates (`soakReport`);
-    *   - restart: the run stops mid-stream and resumes from the checkpoint
-    *     (second half of the input lands after the restart), so interval
-    *     state crosses a cold start — run under SPARK_GRAFT_ROCKSDB=1 for
-    *     the RocksDB form of the claim;
-    *   - equivalence: a driver-held serving map replays the update-mode
-    *     upserts exactly like the JDBC sink (last-write-wins on
-    *     (key, tiebreak, effective_from)); after the run it must equal the
-    *     batch `Cdc.scd2` over the full change log, row for row — the
-    *     stream==batch law at soak scale, across the restart.
-    */
-  private def runSoakScd2(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    import org.apache.spark.sql.Row
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-    val dir = java.nio.file.Files.createTempDirectory("streambench-scd2").toString
-    val ckp = java.nio.file.Files.createTempDirectory("streambench-scd2-ckp").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    def chDf(from: Long, n: Long): DataFrame =
-      spark.range(from, from + n).select(
-        (col("id") % Scd2Entities).as("key"),
-        (col("id") % 997).cast("double").as("value"),
-        (lit(Epoch) + col("id") * 3L - pmod(col("id") * 2654435761L, lit(1500L))).as("ts_ms"),
-        col("id").as("change_id"))
-    def writeChunks(from: Long, until: Long): Unit = {
-      var at = from
-      while (at < until) {
-        val n = math.min(batchSize.toLong, until - at)
-        chDf(at, n).repartition(filesPerChunk).write.mode("append").parquet(dir)
-        at += n
-      }
-    }
-    // serving table replica: (key, change_id, effective_from) ->
-    // (effective_to | MinValue for open, is_current) — the JDBC upsert law
-    val serving = new java.util.concurrent.ConcurrentHashMap[(Long, Long, Long), (Long, Boolean)]()
-    def start() = graft.streaming.Scd2Stream.scd2Stream(
-      spark.readStream.schema(chDf(0, 1).schema)
-        .option("maxFilesPerTrigger", filesPerChunk)
-        .option("latestFirst", "false")
-        .parquet(dir),
-      keys = Seq("key"), tsCol = "ts_ms", tiebreak = "change_id",
-      watermarkDelay = "2 seconds")
-      .writeStream.outputMode("update")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        b.collect().foreach { r =>
-          serving.put((r.getLong(0), r.getLong(3), r.getLong(4)),
-            (if (r.isNullAt(5)) Long.MinValue else r.getLong(5), r.getBoolean(6)))
-        }
-      }
-      .option("checkpointLocation", ckp)
-      .start()
-
-    val half = total / 2L
-    writeChunks(0L, half)
-    val t0 = System.nanoTime()
-    val q1 = start(); q1.processAllAvailable()
-    val progress1 = q1.recentProgress.toSeq
-    q1.stop() // mid-stream cold stop; second half arrives after the restart
-    // generator write excluded from the clock — the sibling soaks pre-write
-    // ALL input before t0, so billing this mid-run write would deflate the
-    // rows/sec headline relative to theirs
-    val w0 = System.nanoTime()
-    writeChunks(half, total.toLong)
-    val writeNs = System.nanoTime() - w0
-    val q2 = start(); q2.processAllAvailable()
-    val secs = (System.nanoTime() - t0 - writeNs) / 1e9
-    val progress2 = q2.recentProgress.toSeq
-    q2.stop()
-    soakReport(progress1 ++ progress2)
-
-    // stream (serving replica) == batch Cdc.scd2 over the full log
-    val batch = graft.ops.Cdc.scd2(
-      spark.read.parquet(dir), keys = Seq("key"), tsCol = "ts_ms", tiebreak = "change_id")
-    var batchRows = 0L
-    var mismatches = 0L
-    val it = batch.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      batchRows += 1
-      // batch columns: key 0, value 1, ts_ms 2, change_id 3,
-      // effective_from 4, effective_to 5, is_current 6
-      val want = (if (r.isNullAt(5)) Long.MinValue else r.getLong(5), r.getBoolean(6))
-      val got = serving.get((r.getLong(0), r.getLong(3), r.getLong(4)))
-      if (got == null || got != want) mismatches += 1
-    }
-    println(s"""{"soak_scd2_serving_rows":${serving.size},"batch_rows":$batchRows,"mismatches":$mismatches,"restart_at_row":$half,"entities":$Scd2Entities}""")
-    (total.toLong, secs)
-  }
-
-  /** Distinct semantic directions in the semdedup soak feed: vector id
-    * carries direction id % SemSoakDirs, so every direction recurs each
-    * `SemSoakDirs` ids (1.5 s of event time at 3 ms/row) — always inside
-    * the 2 s watermark, which makes the admission law CLOSED-FORM: each
-    * direction is admitted exactly once, at its first id.
-    */
-  val SemSoakDirs = 500
-  val SemSoakCells = 16L
-  /** Soak threshold: high enough that distinct sin-hash directions can
-    * never cross it (the generator VERIFIES max cross-direction cosine <
-    * threshold driver-side before the run, so the closed-form law is exact,
-    * not probabilistic), while identical directions sit at cosine 1.
-    */
-  val SemSoakThreshold = 0.9
-
-  private def semVecDf(spark: SparkSession, from: Long, n: Long): DataFrame =
-    spark.range(from, from + n).select(
-      timestamp_millis(lit(Epoch) + col("id") * 3L).as("ts"),
-      col("id").as("vec_id"),
-      // murmur3-hashed components, NOT sin(d*i + ...): sin of a linear phase
-      // is periodic in d, and directions ~2πk apart correlated up to cosine
-      // 0.96 — above the soak threshold, which the premise check rejected.
-      // Hashed components measure max cross-direction cosine ~0.49.
-      expr(s"transform(sequence(1, 64), i -> cast(hash(cast(id % $SemSoakDirs as int), i)" +
-        " as float))").as("embedding"))
-
-  /** Streaming SemDeDup soak (round-13 verdict item 6): churning semantic
-    * duplicates through `SemDedupStream.admitted` against a frozen 16-cell
-    * quantizer, with a MID-STREAM cold restart from checkpoint (the scd2
-    * soak's shape). Two verdicts: the state plateau (soakReport — per-cell
-    * buffers are bounded by arrival rate × watermark, independent of run
-    * length) and the exact admission law (every direction admitted exactly
-    * once, at its first id — closed-form because the generator proves its
-    * directions are separated below the threshold and every recurrence
-    * lands inside the watermark).
-    */
-  private def runSoakSemDedup(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-    val dir = java.nio.file.Files.createTempDirectory("streambench-sem").toString
-    val ckp = java.nio.file.Files.createTempDirectory("streambench-sem-ckp").toString
-    val outDir = java.nio.file.Files.createTempDirectory("streambench-sem-out").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    def writeChunks(from: Long, until: Long): Unit = {
-      var at = from
-      while (at < until) {
-        val n = math.min(batchSize.toLong, until - at)
-        semVecDf(spark, at, n).repartition(filesPerChunk).write.mode("append").parquet(dir)
-        at += n
-      }
-    }
-    // frozen quantizer = the first SemSoakCells directions (ids 0..15 carry
-    // direction = id), collected once — the FromSigs convention
-    val cents = graft.streaming.SemDedupStream.frozenCents(
-      semVecDf(spark, 0, SemSoakCells).select(col("vec_id"), col("embedding")), SemSoakCells)
-    // prove the closed-form law's premise: distinct directions never cross
-    // the threshold (driver-side, 500 vectors, one-time)
-    val dirs = semVecDf(spark, 0, SemSoakDirs).select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      .map { v =>
-        val nrm = math.sqrt(v.map(x => x * x).sum)
-        v.map(_ / nrm)
-      }
-    var crossMax = -1.0
-    for (i <- dirs.indices; j <- (i + 1) until dirs.length) {
-      var s = 0.0; var c = 0
-      while (c < 64) { s += dirs(i)(c) * dirs(j)(c); c += 1 }
-      if (s > crossMax) crossMax = s
-    }
-    require(crossMax < SemSoakThreshold,
-      s"soak generator premise violated: max cross-direction cosine $crossMax")
-
-    def start() = graft.streaming.SemDedupStream.admitted(
-      spark.readStream.schema(semVecDf(spark, 0, 1).schema)
-        .option("maxFilesPerTrigger", filesPerChunk)
-        .option("latestFirst", "false")
-        .parquet(dir),
-      cents, threshold = SemSoakThreshold, watermarkDelay = "2 seconds")
-      .writeStream.format("parquet").option("path", outDir)
-      .option("checkpointLocation", ckp)
-      .outputMode("append").start()
-
-    val half = total / 2L
-    writeChunks(0L, half)
-    val t0 = System.nanoTime()
-    val q1 = start(); q1.processAllAvailable()
-    val progress1 = q1.recentProgress.toSeq
-    q1.stop() // mid-stream cold stop; second half arrives after the restart
-    val w0 = System.nanoTime()
-    writeChunks(half, total.toLong)
-    val writeNs = System.nanoTime() - w0
-    val q2 = start(); q2.processAllAvailable()
-    val secs = (System.nanoTime() - t0 - writeNs) / 1e9
-    val progress2 = q2.recentProgress.toSeq
-    q2.stop()
-    soakReport(progress1 ++ progress2)
-
-    val admitted = spark.read.parquet(outDir).select(col("vec_id"))
-      .collect().map(_.getLong(0)).sorted
-    val expected = (0L until SemSoakDirs.toLong).toArray
-    val unexpected = admitted.filterNot(_ < SemSoakDirs)
-    val missing = expected.filterNot(admitted.contains)
-    println(s"""{"soak_semdedup_admitted":${admitted.length},"expected":$SemSoakDirs,""" +
-      s""""unexpected":${unexpected.length},"missing":${missing.length},""" +
-      s""""cross_max_cos":${math.round(crossMax * 1e6) / 1e6},""" +
-      s""""restart_at_row":$half,"cells":$SemSoakCells}""")
-    (total.toLong, secs)
-  }
-
-  /** New-only directions in the handover soak (appear only at/after the
-    * seam, so only the NEW epoch can admit them).
-    */
-  val SemHandoverNewDirs = 100
-
-  /** Quantizer-refresh HANDOVER soak (round-15 verdict item 6) — the full
-    * operational recipe from `SemDedupStream.verdictsWithHandover`'s
-    * scaladoc, run end-to-end as two queries over one feed:
-    *
-    *   query 1 (OLD epoch, 16-cell quantizer) consumes the feed up to 60%
-    *   of rows, its sink gated to ts < cutover (event time of row 55%);
-    *   query 2 (the handover: old 16-cell + new 32-cell, fresh checkpoint)
-    *   replays the WHOLE feed with `emitFromMs = cutover`, so its old-epoch
-    *   incumbents rebuild from the replay and its sink owns ts >= cutover.
-    *
-    * Feed: 500 directions recur every 1.5 s throughout (straddling the
-    * seam); at/after the seam every 6th row instead carries one of 100 NEW
-    * directions (recurring every 1.8 s). Worst straddle gap is 4.5 s
-    * (occurrence slots stolen by new dirs), so the watermark delay is 5 s
-    * and every recurrence stays in-watermark — the admission law is
-    * closed-form: the UNION of the two sinks admits each of the 600
-    * directions EXACTLY once (500 pre-seam via query 1; 100 post-seam via
-    * query 2; NO straddling direction re-admits across the seam — the
-    * probe-only bridge catches the first post-seam recurrence against the
-    * rebuilt old incumbents). The generator verifies its cross-direction
-    * cosine premise driver-side like the semdedup soak.
-    */
-  private def runSoakSemHandover(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    // Floor 5000, not 3000 (round-15 advice): the admission law needs q2's
-    // append-mode OR-agg to FINALIZE every new direction, which happens only
-    // for rows below maxEvent - 5s watermark delay. The last new direction
-    // first occurs just after the 55% cutover row, so the feed must extend
-    // at least one watermark delay (5s of event time = ~1667 rows at 3 ms
-    // spacing) past it; at total=3000 the feed ends before the cutover rows
-    // finalize and the soak reports a GUARANTEED false law violation.
-    require(total >= 5000, s"handover soak needs >= 5000 rows, got $total")
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    val cutRow = total.toLong * 55 / 100
-    val oldUntil = total.toLong * 60 / 100
-    val cutoverMs = Epoch + cutRow * 3L
-    val nDirs = SemSoakDirs + SemHandoverNewDirs
-
-    def vecDf(from: Long, n: Long): DataFrame =
-      spark.range(from, from + n).select(
-        timestamp_millis(lit(Epoch) + col("id") * 3L).as("ts"),
-        col("id").as("vec_id"),
-        expr(s"transform(sequence(1, 64), i -> cast(hash(cast(" +
-          s"CASE WHEN id >= ${cutRow}L AND id % 6 = 0 " +
-          s"THEN $SemSoakDirs + (id div 6) % $SemHandoverNewDirs " +
-          s"ELSE id % $SemSoakDirs END as int), i) as float))").as("embedding"))
-    def dirOf(id: Long): Long =
-      if (id >= cutRow && id % 6 == 0) SemSoakDirs + (id / 6) % SemHandoverNewDirs
-      else id % SemSoakDirs
-
-    // premise: all 600 hashed directions separated below the threshold
-    val dirs = spark.range(nDirs).select(
-      expr("transform(sequence(1, 64), i -> cast(hash(cast(id as int), i) as float))"))
-      .collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      .map { v => val nrm = math.sqrt(v.map(x => x * x).sum); v.map(_ / nrm) }
-    var crossMax = -1.0
-    for (i <- dirs.indices; j <- (i + 1) until dirs.length) {
-      var s = 0.0; var c = 0
-      while (c < 64) { s += dirs(i)(c) * dirs(j)(c); c += 1 }
-      if (s > crossMax) crossMax = s
-    }
-    require(crossMax < SemSoakThreshold,
-      s"soak generator premise violated: max cross-direction cosine $crossMax")
-
-    val oldCents = graft.streaming.SemDedupStream.frozenCents(
-      vecDf(0, SemSoakCells).select(col("vec_id"), col("embedding")), SemSoakCells)
-    val newCents = graft.streaming.SemDedupStream.frozenCents(
-      vecDf(0, 32).select(col("vec_id"), col("embedding")), 32L)
-
-    val dirOld = java.nio.file.Files.createTempDirectory("sbh-old").toString
-    val dirAll = java.nio.file.Files.createTempDirectory("sbh-all").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    def writeChunks(from: Long, until: Long, dsts: Seq[String]): Unit = {
-      var at = from
-      while (at < until) {
-        val n = math.min(batchSize.toLong, until - at)
-        val chunk = vecDf(at, n).repartition(filesPerChunk)
-        dsts.foreach(d => chunk.write.mode("append").parquet(d))
-        at += n
-      }
-    }
-    def reader(dir: String) = spark.readStream.schema(vecDf(0, 1).schema)
-      .option("maxFilesPerTrigger", filesPerChunk)
-      .option("latestFirst", "false").parquet(dir)
-
-    // phase 1: the incumbent single-epoch query, sink gated to ts < cutover
-    writeChunks(0L, oldUntil, Seq(dirOld, dirAll))
-    val out1 = java.nio.file.Files.createTempDirectory("sbh-out1").toString
-    val ckp1 = java.nio.file.Files.createTempDirectory("sbh-ckp1").toString
-    val t0 = System.nanoTime()
-    val q1 = graft.streaming.SemDedupStream.admitted(
-      reader(dirOld), oldCents, threshold = SemSoakThreshold, watermarkDelay = "5 seconds")
-      .filter(col("ts") < timestamp_millis(lit(cutoverMs)))
-      .writeStream.format("parquet").option("path", out1)
-      .option("checkpointLocation", ckp1).outputMode("append").start()
-    q1.processAllAvailable()
-    val progress1 = q1.recentProgress.toSeq
-    q1.stop() // drained: its watermark passed the cutover; it owns ts < cutover
-
-    // phase 2: the handover query — FRESH checkpoint, full replay, sink
-    // owns ts >= cutover (emitFromMs), with a MID-RUN COLD RESTART past the
-    // seam (at 80% of rows): recovery must reload BOTH epoch operators'
-    // stores and the OR-agg from the checkpoint, and the admission law must
-    // come out unchanged
-    val restartAt = total.toLong * 80 / 100
-    val w0 = System.nanoTime()
-    writeChunks(oldUntil, restartAt, Seq(dirAll))
-    val writeNs = System.nanoTime() - w0
-    val out2 = java.nio.file.Files.createTempDirectory("sbh-out2").toString
-    val ckp2 = java.nio.file.Files.createTempDirectory("sbh-ckp2").toString
-    def startQ2() = graft.streaming.SemDedupStream.admittedWithHandover(
-      reader(dirAll), oldCents, newCents, cutoverMs,
-      threshold = SemSoakThreshold, watermarkDelay = "5 seconds",
-      emitFromMs = Some(cutoverMs))
-      .writeStream.format("parquet").option("path", out2)
-      .option("checkpointLocation", ckp2).outputMode("append").start()
-    val q2a = startQ2()
-    q2a.processAllAvailable()
-    val progress2a = q2a.recentProgress.toSeq
-    q2a.stop() // cold stop past the seam; rest of the feed arrives offline
-    val w1 = System.nanoTime()
-    writeChunks(restartAt, total.toLong, Seq(dirAll))
-    val writeNs2 = System.nanoTime() - w1
-    val q2 = startQ2()
-    q2.processAllAvailable()
-    val secs = (System.nanoTime() - t0 - writeNs - writeNs2) / 1e9
-    val progress2 = progress2a ++ q2.recentProgress.toSeq
-    q2.stop()
-    // report PER QUERY: the two queries have different operator sets (q1:
-    // one flatMap; q2: two flatMaps + the OR-agg), so one concatenated
-    // mid-vs-final comparison would read q2's agg rows against q1's cell
-    // plateau and cry growth where there is none
-    soakReport(progress1)
-    soakReport(progress2)
-
-    val admitted = spark.read.parquet(out1).select(col("vec_id"))
-      .unionAll(spark.read.parquet(out2).select(col("vec_id")))
-      .collect().map(_.getLong(0))
-    val byDir = admitted.groupBy(dirOf).view.mapValues(_.length).toMap
-    val doubled = byDir.count(_._2 > 1)
-    val missing = (0L until nDirs.toLong).count(!byDir.contains(_))
-    val preSeamAdmits = admitted.count(id => Epoch + id * 3L < cutoverMs)
-    println(s"""{"soak_semhandover_admitted":${admitted.length},"expected":$nDirs,""" +
-      s""""doubled":$doubled,"missing":$missing,"pre_seam":$preSeamAdmits,""" +
-      s""""cross_max_cos":${math.round(crossMax * 1e6) / 1e6},""" +
-      s""""cutover_row":$cutRow,"restart_at_row":$restartAt,""" +
-      s""""old_cells":$SemSoakCells,"new_cells":32}""")
-    (total.toLong, secs)
-  }
+  private val SemSoakThreshold = 0.9
 
   /** Fixed contaminated text for the full-chain soak: every shingle of it is
     * in the benchmark set (computed from this exact text), so the decontam
@@ -812,7 +144,7 @@ object StreamBench {
     *     match and the Jaccard-1 verification are deterministic, no LSH
     *     probability in the law — NEAR-DUP admits 1/nfam;
     *   - sfam = id div 40: query 2 derives each admitted doc's embedding as
-    *     the hash-direction of its sfam (the semdedup-soak generator), so the
+    *     the hash-direction of its sfam (murmur3-hashed components), so the
     *     two nfam survivors of an sfam are semantic duplicates (cosine 1) 60 ms
     *     apart — SEMANTIC admits 1/sfam.
     *
@@ -829,8 +161,7 @@ object StreamBench {
     * hold 1 h of EVENT time ≈ 60k rows (plateau from ~6% into a 20M run).
     */
   private def runSoakFullChain(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    require(total >= 400000, s"full-chain soak needs >= 400000 rows, got $total")
+      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): Double = {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
 
@@ -948,39 +279,6 @@ object StreamBench {
       s""""admitted_semantic":${a2.length},"expected_semantic":$sfams,""" +
       s""""sfam_doubled":$sfamDoubled,"sfam_missing":$sfamMissing,""" +
       s""""bench_shingles":${bench.length}}""")
-    (total.toLong, secs)
-  }
-
-  /** Partitioned-ingest shape: each event-time-contiguous chunk is written as
-    * `filesPerChunk` parquet files (so a micro-batch scans in parallel), and
-    * `maxFilesPerTrigger` makes each chunk one micro-batch, preserving the
-    * memory path's batch cadence and rough event-time ordering for the
-    * watermark. File pre-write happens entirely outside the timer.
-    */
-  private def runFile(
-      spark: SparkSession, total: Int, batchSize: Int, cpus: Int): (Long, Double) = {
-    val dir = java.nio.file.Files.createTempDirectory("streambench").toString
-    val filesPerChunk = math.max(cpus / 2, 4)
-    var from = 0L
-    var chunk = 0
-    while (from < total) {
-      val n = math.min(batchSize.toLong, total - from)
-      eventsDf(spark, from, n).repartition(filesPerChunk)
-        .write.mode("append").parquet(dir)
-      from += n
-      chunk += 1
-    }
-    val schema = eventsDf(spark, 0, 1).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerChunk)
-      .option("latestFirst", "false")
-      .parquet(dir)
-    val t0 = System.nanoTime()
-    val q = windowedSum(src).writeStream.format("memory")
-      .queryName("sbf").outputMode("append").start()
-    q.processAllAvailable()
-    val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    (total.toLong, secs)
+    secs
   }
 }

@@ -254,9 +254,11 @@ object Relational {
         col("p_partkey"),
         substring(col("p_name"), 3, 8).as("sub_mid"),
         expr("substring(p_name, 2)").as("sub_from"),
-        trim(col("p_name"), "a").as("trim_a"),
-        ltrim(col("p_name"), "a").as("ltrim_a"),
-        rtrim(col("p_name"), "a").as("rtrim_a"),
+        // the SQL-standard spelling; the two-argument trim(col, "a") form is
+        // deprecated, and its argument order differs between dialects
+        expr("TRIM(BOTH 'a' FROM p_name)").as("trim_a"),
+        expr("TRIM(LEADING 'a' FROM p_name)").as("ltrim_a"),
+        expr("TRIM(TRAILING 'a' FROM p_name)").as("rtrim_a"),
         concat(col("p_brand"), lit("#"), col("p_type")).as("cat"),
         lower(col("p_type")).as("lo"))),
 

@@ -162,7 +162,7 @@ object NearDupStream {
     * and per-operator watermark propagation registers only the first
     * planned instance of a stateful operator — the second instance's
     * eviction watermark stays 0 forever, so its state store never evicts
-    * (found by the round-10 StreamBench soak: the duplicated
+    * (found by the round-10 20M-row soak, BASELINE.md: the duplicated
     * `dropDuplicatesWithinWatermark` grew one row per admitted doc,
     * unbounded). Pass a STATELESS subplan here; if the upstream contains a
     * stateful operator (exact dedup, an aggregation), pre-split short/long

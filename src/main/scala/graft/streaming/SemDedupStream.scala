@@ -307,7 +307,8 @@ object SemDedupStream {
     * single-epoch query running (its sink filtered to ts < cutover) until
     * its watermark passes the cutover, then stop it. The two output gates
     * partition on ts, so the union of the two sinks is exactly-once across
-    * the seam (StreamBench `soak_semhandover` proves the law end-to-end).
+    * the seam (SemDedupStreamSpec "two-query handover recipe" pins the law,
+    * with the handover query restarted past the seam).
     *
     * TWO stateful operators feed a third (the agg): requires
     * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`,

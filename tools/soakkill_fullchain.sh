@@ -21,9 +21,17 @@ BATCH="${2:-100000}"
 KILL_S="${3:-30}"
 ROCKSDB="${4:-0}"
 EVID=SOAKKILL_evidence.log
-# 2 executors x 16 threads; 12g heap each (the soak's state is small — the
-# heavy part is the parquet feed scan + shuffle), driver 8g
-MASTER='local-cluster[2,16,16384]'
+# Sized from this machine's cores and RAM: two executors share the cores,
+# each gets 1/8 of RAM (1-12 GB) and the driver 1/4 (2-8 GB), so the whole
+# run stays near half of RAM. The soak's state is small; the heavy part is
+# the parquet feed scan and shuffle.
+CPUS="$(env -u OMP_NUM_THREADS nproc)"
+MEM_MB="$(awk '/^MemTotal:/ {print int($2 / 1024)}' /proc/meminfo)"
+clamp() { awk -v v="$1" -v lo="$2" -v hi="$3" 'BEGIN {print (v < lo ? lo : v > hi ? hi : int(v))}'; }
+EXEC_CORES=$(( CPUS / 2 > 0 ? CPUS / 2 : 1 ))
+EXEC_MB="$(clamp $(( MEM_MB / 8 )) 1024 12288)"
+DRIVER_MB="$(clamp $(( MEM_MB / 4 )) 2048 8192)"
+MASTER="local-cluster[2,$EXEC_CORES,$EXEC_MB]"
 
 run_one() { # $1=log $2=kill(0/1)
   local t0 t1 rc
@@ -57,8 +65,8 @@ run_one() { # $1=log $2=kill(0/1)
   # evidence needs are DAGScheduler INFO lines, below the WARN root level
   SPARK_GRAFT_MASTER="$MASTER" SPARK_SCALA_VERSION=2.13 \
     SPARK_GRAFT_LOG_DAG=1 \
-    SPARK_GRAFT_EXECUTOR_MEM=12g SPARK_GRAFT_ROCKSDB="$ROCKSDB" \
-    SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=8g \
+    SPARK_GRAFT_EXECUTOR_MEM="${EXEC_MB}m" SPARK_GRAFT_ROCKSDB="$ROCKSDB" \
+    SPARK_GRAFT_CPUS="$CPUS" SPARK_DRIVER_MEM="${DRIVER_MB}m" \
     bash tools/run_verify.sh graft.StreamBench soak_fullchain "$ROWS" "$BATCH" \
     > "$1" 2>&1
   rc=$?
@@ -89,7 +97,7 @@ EOF
 }
 
 : > "$EVID"
-echo "mode=soak_fullchain rows=$ROWS batch=$BATCH master=$MASTER rocksdb=$ROCKSDB kill_at=${KILL_S}s" >> "$EVID"
+echo "mode=soak_fullchain rows=$ROWS batch=$BATCH master=$MASTER executor_mem=${EXEC_MB}m driver_mem=${DRIVER_MB}m cpus=$CPUS rocksdb=$ROCKSDB kill_at=${KILL_S}s" >> "$EVID"
 
 echo "--- kill run ---" >> "$EVID"
 read -r KILL_WALL KILL_RC <<< "$(run_one /tmp/soakkill_kill.log 1)"
