@@ -24,6 +24,8 @@ import org.apache.spark.sql.SparkSession
   *   - `SPARK_GRAFT_PIN_RELIABLE=true|auto`: the pin mode ([[Pinned]]; see
   *     [[fromEnv]]);
   *   - `SPARK_GRAFT_LOG_DAG=1`: DAGScheduler at INFO (see [[start]]).
+  * Every session it builds also gets fork-free local filesystems
+  * ([[localFs]]), with no knob.
   * `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_MASTER` only supply [[builder]]'s
   * defaults; the mains pass their builder through [[fromEnv]].
   *
@@ -64,6 +66,22 @@ object GraftSession {
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString)
 
+  /** `file://` for every session [[builder]] makes: `fs.file.impl` is
+    * [[ForkFreeLocalFileSystem]] (the `FileSystem` API: reliable pins,
+    * parquet writes) and `fs.AbstractFileSystem.file.impl` is
+    * [[ForkFreeLocalFs]] (`FileContext`: Spark's streaming checkpoint file
+    * manager). Spark ships Hadoop without `libhadoop`, so the stock local
+    * filesystems fork `chmod` for every file and directory they create and
+    * `readlink` for every `FileContext` rename; Spark's checkpoint checksum
+    * files (left on) double the files a streaming batch creates. Each batch
+    * of `perfbench`'s `stream_window` waited on those forks for its offsets,
+    * WAL, commit log and state deltas. The replacements write the same
+    * files, modes, `.crc` files and checkpoint checksums.
+    */
+  private val localFs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
   def builder(
       master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       shufflePartitions: Int = cpus,
@@ -75,7 +93,7 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
-    (contract ++ policy).foreach { case (k, v) => b.config(k, v) }
+    (contract ++ policy ++ localFs).foreach { case (k, v) => b.config(k, v) }
     // Executors of a local-cluster master are fresh JVMs without this
     // process's classpath; they share this box, so they read the engine
     // classes from where this JVM loaded them.

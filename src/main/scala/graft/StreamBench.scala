@@ -58,6 +58,9 @@ object StreamBench {
     spark.stop()
   }
 
+  /** Fewest input batches whose thirds [[soakReport]] can compare. */
+  private val MinVerdictBatches = 6
+
   /** Soak telemetry, per query: one JSON line per micro-batch (input rows,
     * per-operator state rows/bytes), then the plateau verdict comparing
     * peak state over the middle vs final third of the run — bounded stores
@@ -68,7 +71,8 @@ object StreamBench {
     * monotonically on a perfectly bounded store), while bytes (memory +
     * SST files) plateau. HDFS-backed runs report exact rows and the two
     * curves agree. Verdict: bounded iff EITHER curve plateaus — a real
-    * leak grows both.
+    * leak grows both. A query with fewer than [[MinVerdictBatches]] input
+    * batches gets an explicit `too_few_batches` verdict instead.
     */
   private def soakReport(
       progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]): Unit = {
@@ -92,7 +96,9 @@ object StreamBench {
       println(s"""{"soak_batch":$id,"input_rows":$in,"state_rows_total":$rowsSum,"state_bytes_total":$bytes,"state_rows":$rowsArr,"state_mem":$memArr}""")
     }
     val n = perBatch.size
-    if (n >= 6) {
+    if (n < MinVerdictBatches)
+      println(s"""{"soak_verdict":"too_few_batches","batches":$n,"needed":$MinVerdictBatches}""")
+    else {
       def thirds(sel: ((Long, Long, Long, Long, String, String)) => Long): (Long, Long, Double) = {
         val mid = perBatch.slice(n / 3, 2 * n / 3).map(sel).max
         val fin = perBatch.slice(2 * n / 3, n).map(sel).max

@@ -17,7 +17,9 @@
 set -uo pipefail
 cd "$(dirname "$0")/.."
 ROWS="${1:-2000000}"
-BATCH="${2:-100000}"
+# default chunk: a tenth of the feed, so the soak's plateau verdict (6 or
+# more input batches per query) always has the batches it needs
+BATCH="${2:-$(( ROWS / 10 ))}"
 KILL_S="${3:-30}"
 ROCKSDB="${4:-0}"
 EVID=SOAKKILL_evidence.log
