@@ -28,14 +28,9 @@ import org.apache.spark.sql.SparkSession
   *     observed BEFORE each sweep. A poisoned session is now self-diagnosing
   *     from the artifact alone (healthy run: storage returns to ~0 after
   *     each sweep and gc_ms stays a small fraction of wall time).
-  *   - `SPARK_GRAFT_BENCH_ISOLATE=1` is the adjudication mode: a FRESH
-  *     SparkSession (new SparkContext) per query, so nothing can leak across
-  *     queries at all. Slower (pays JVM/session startup per query) but
-  *     removes every cross-query channel; use it to confirm whether an
-  *     in-session number is contamination or a real regression.
   *   - `SPARK_GRAFT_BENCH_ONLY=q_a,q_b` restricts the run to the named
-  *     queries (both modes), so re-adjudicating one suspect query doesn't
-  *     cost a full session.
+  *     queries, so re-adjudicating one suspect query doesn't cost a full
+  *     session.
   *   - per query, `cpu_ms` (process CPU time over the timed passes) and
   *     `load` (peak 1-min system load) make EXTERNAL starvation readable
   *     from the artifact alone: wall time 100x healthy with cpu_ms/wall far
@@ -65,7 +60,7 @@ object Bench {
       if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
     }
   }
-  private var tally = new ShuffleTally
+  private val tally = new ShuffleTally
 
   /** Listener delivery is async; drain the bus before reading the tally so
     * a query's tail tasks are billed to IT, not its successor.
@@ -73,17 +68,6 @@ object Bench {
   private def shuffleBytes(spark: SparkSession): Long = {
     org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
     tally.bytes.get()
-  }
-
-  private def newSession(sfDir: String): SparkSession = {
-    // Partitions sized from the FIXTURE (GraftSession.shufflePartitionsFor:
-    // small fixtures stay = cpus, the bench contract; sf100's 15 GB gets
-    // the ≥256 partitions its 600M-row in-partition sorts need).
-    val spark = GraftSession.start(GraftSession.fromEnv(GraftSession.builder(
-      shufflePartitions = GraftSession.shufflePartitionsFor(sfDir, GraftSession.cpus))))
-    tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    spark
   }
 
   /** Cumulative stop-the-world GC millis of this JVM (driver == executors at
@@ -175,9 +159,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
-    val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b re-checks a suspect subset (~50x cheaper
-    // than a full session for isolate-mode adjudication of one query). An
+    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b re-checks a suspect subset. An
     // unknown name is LOUD: a typo silently benching zero queries would read
     // as a vacuous pass.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -190,15 +172,15 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
-    var spark = newSession(sfDir)
+    // Partitions sized from the FIXTURE (GraftSession.shufflePartitionsFor:
+    // small fixtures stay = cpus, the bench contract; sf100's 15 GB gets
+    // the ≥256 partitions its 600M-row in-partition sorts need).
+    val spark = GraftSession.start(GraftSession.fromEnv(GraftSession.builder(
+      shufflePartitions = GraftSession.shufflePartitionsFor(sfDir, GraftSession.cpus))))
+    spark.sparkContext.addSparkListener(tally)
 
-    // warm-up pass (untimed; in isolate mode each query warms its own fresh
-    // session instead). SPARK_GRAFT_BENCH_WARMUP=0 skips it — for the
-    // third-decade (sf100) probes a query runs minutes, the steady-state
-    // JIT delta is noise against that wall, and the warm-up would double
-    // the probe's cost for nothing.
-    val warmup = !sys.env.get("SPARK_GRAFT_BENCH_WARMUP").contains("0")
-    if (!isolate && warmup) ordered.foreach { case (_, fn) =>
+    // warm-up pass (untimed)
+    ordered.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
       sweep(spark)
     }
@@ -206,11 +188,9 @@ object Bench {
     // A failed query must be LOUD: it reports {"err": ...} instead of a
     // timing, never a number that shrinks the total, and fails the process
     // exit code so a regression can't bench as an improvement.
-    val results: Seq[(String, Either[String, QStat])] = ordered.zipWithIndex.map {
-      case ((name, fn), i) =>
-        if (isolate && i > 0) { spark.stop(); spark = newSession(sfDir) }
+    val results: Seq[(String, Either[String, QStat])] = ordered.map {
+      case (name, fn) =>
         try {
-          if (isolate && warmup) { fn(spark, sfDir).count(); sweep(spark) } // per-query warm-up
           val gc0 = gcMs()
           val cpu0 = cpuMs()
           val sh0 = shuffleBytes(spark)
@@ -272,7 +252,7 @@ object Bench {
     // arrives mid-session). ~2 s, single-threaded, no Spark.
     val anchor = math.round(cpuAnchor() * 100) / 100.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"isolate":${if (isolate) 1 else 0},"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"ncores":$ncores,"cpu_anchor":$anchor,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"ncores":$ncores,"cpu_anchor":$anchor,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // The driver scrapes a bounded stdout tail, which truncated the big line
     // mid-JSON in rounds 5 and 6. Persist the full line to a file as the
     // durable primary artifact, print it, then print a SHORT headline LAST so
@@ -292,7 +272,7 @@ object Bench {
     val qsCompact = results.collect { case (k, Right(s)) =>
       "\"" + k + "\":" + median(s.times)
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"isolate":${if (isolate) 1 else 0},"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"ncores":$ncores,"cpu_anchor":$anchor,"nqueries":${results.size},"queries":$qsCompact,"failed":$failedJson,"bench_out":"$outFile","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"ncores":$ncores,"cpu_anchor":$anchor,"nqueries":${results.size},"queries":$qsCompact,"failed":$failedJson,"bench_out":"$outFile","sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

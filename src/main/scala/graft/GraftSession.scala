@@ -21,11 +21,11 @@ import org.apache.spark.sql.SparkSession
   *     `local-cluster[...]` master ships the engine classes to its executor
   *     JVMs via `spark.executor.extraClassPath`;
   *   - `SPARK_GRAFT_EXECUTOR_MEM`: `spark.executor.memory` (see [[fromEnv]]);
-  *   - `SPARK_GRAFT_PIN_RELIABLE=true|auto`: the pin mode ([[Pinned]]; see
-  *     [[fromEnv]]);
   *   - `SPARK_GRAFT_LOG_DAG=1`: DAGScheduler at INFO (see [[start]]).
   * Every session it builds also gets fork-free local filesystems
-  * ([[localFs]]), with no knob.
+  * ([[localFs]]) and the HDFS-backed streaming state store (Spark's
+  * default), with no knob; the pin durability follows the master
+  * ([[Pinned]]).
   * `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_MASTER` only supply [[builder]]'s
   * defaults; the mains pass their builder through [[fromEnv]].
   *
@@ -35,7 +35,9 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.shuffle.partitions` to ~2-3x total cores and let AQE shrink.
   */
 object GraftSession {
-  /** `spark.sql.streaming.stateStore.providerClass` value for RocksDB. */
+  /** `spark.sql.streaming.stateStore.providerClass` value for RocksDB. The
+    * factory never sets it; a session opts in through that Spark conf.
+    */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -64,7 +66,11 @@ object GraftSession {
     // Skewed group/join keys re-split at runtime; essential at 100 TB where
     // a single hot key would otherwise straggle one executor.
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString)
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+    // A multi-JVM master pins to checkpoint FILES ([[Pinned]]); reap those of
+    // GC'd plans, or a long multi-pin run keeps every dead plan's files on
+    // disk. A static conf, and a no-op for local checkpoints.
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
 
   /** `file://` for every session [[builder]] makes: `fs.file.impl` is
     * [[ForkFreeLocalFileSystem]] (the `FileSystem` API: reliable pins,
@@ -84,8 +90,7 @@ object GraftSession {
 
   def builder(
       master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
-      shufflePartitions: Int = cpus,
-      rocksDbStateStore: Boolean = false
+      shufflePartitions: Int = cpus
   ): SparkSession.Builder = {
     val b = SparkSession
       .builder()
@@ -100,33 +105,19 @@ object GraftSession {
     if (master.startsWith("local-cluster"))
       b.config("spark.executor.extraClassPath", new java.io.File(
         getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath)
-    // Large streaming state (high-cardinality keyed over-windows, stream
-    // dedup) should live off the executor heap: RocksDB spills to local disk
-    // and keeps the JVM heap for execution. Per-query override:
-    // spark.sql.streaming.stateStore.providerClass in writeStream options.
-    if (rocksDbStateStore) b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    else b
+    b
   }
 
-  /** Apply the deployment env (`SPARK_GRAFT_EXECUTOR_MEM`,
-    * `SPARK_GRAFT_PIN_RELIABLE`) to `b`. Kept out of [[builder]] so a session
-    * built with explicit arguments (the test session, the benchmark harness)
-    * does not depend on the shell it runs in.
+  /** Apply the deployment env (`SPARK_GRAFT_EXECUTOR_MEM`) to `b`. Kept out
+    * of [[builder]] so a session built with explicit arguments (the test
+    * session, the benchmark harness) does not depend on the shell it runs in.
     */
   def fromEnv(b: SparkSession.Builder): SparkSession.Builder = {
     // local-cluster GOTCHA: the [n,cores,mem] worker size only CAPS
     // resources — executor JVMs still launch with the spark.executor.memory
     // DEFAULT (1g), which OOMs sf100-scale stages while sf0.01 sails through.
     sys.env.get("SPARK_GRAFT_EXECUTOR_MEM").foreach(m => b.config("spark.executor.memory", m))
-    // Reliable pins write FILES; the cleaner's checkpoint reaping is a static
-    // conf, so it must land here, or a long multi-pin run accumulates every
-    // dead plan's checkpoint data on disk.
-    sys.env.get("SPARK_GRAFT_PIN_RELIABLE").map(_.trim.toLowerCase) match {
-      case Some(m @ ("true" | "auto")) =>
-        b.config(Pinned.ReliableKey, m)
-          .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      case _ => b
-    }
+    b
   }
 
   /** Get or create the session `b` describes, with the root logger at WARN.

@@ -3,37 +3,26 @@ package graft
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
-/** Lineage-cut "pin" with a selectable durability mode — THE materialization
-  * primitive for every iterative / multi-consumer operator in the engine
-  * (BPE rounds, k-means Lloyd steps, large-star/small-star CC, the
-  * semanticDedup normalized projection, …). A pin must cut lineage (the
-  * iterative plans grow without bound otherwise) and materialize once for
-  * N consumers; the two modes trade how the materialized blocks survive
-  * executor loss:
+/** Lineage-cut "pin" — THE materialization primitive for every iterative /
+  * multi-consumer operator in the engine (BPE rounds, k-means Lloyd steps,
+  * large-star/small-star CC, the semanticDedup normalized projection, …). A
+  * pin must cut lineage (the iterative plans grow without bound otherwise)
+  * and materialize once for N consumers. How the materialized blocks survive
+  * executor loss follows the master ([[reliableFor]]), with no knob:
   *
-  *   - default (`graft.pin.reliable` unset/false): `localCheckpoint` —
-  *     blocks live in executor storage memory/disk, zero extra I/O. Fast,
-  *     but BY CONTRACT Spark does not recompute lost local checkpoints:
-  *     losing an executor mid-job is terminal for the query (demonstrated
-  *     in FETCHFAIL_evidence.log — q_dedup_prefix died on
-  *     STAGE_MATERIALIZATION_MULTIPLE_FAILURES after an executor kill).
-  *     The right default for a single JVM, where "executor loss" == "the
-  *     whole process died anyway".
+  *   - `local` / `local[...]` (one JVM): `localCheckpoint` — blocks live in
+  *     executor storage memory/disk, zero extra I/O. Spark does not
+  *     recompute lost local checkpoints, but in one JVM "executor loss" ==
+  *     "the whole process died anyway".
   *
-  *   - auto (`graft.pin.reliable=auto`): reliable iff the pinned plan's
-  *     Catalyst size estimate reaches `graft.pin.autoBytes` (default
-  *     4 GiB), else default — the measured crossover rule (BASELINE
-  *     round-17): below low-GB pins the file write dominates (≤1.6×
-  *     slower), above it the eager file pin is FASTER than
-  *     localCheckpoint because it deletes a partition-count-linked
-  *     exchange-and-recompute class (sf100: semanticDedup 0.64×,
-  *     clusters 0.76× of the default walls).
-  *
-  *   - reliable (`graft.pin.reliable=true`): `Dataset.checkpoint` to the
-  *     checkpoint directory. Blocks become FILES: executor loss costs a
-  *     re-read, not a job restart, matching the reference's fault model
-  *     where shuffle loss is a task-level retry, not a job-level one
-  *     (reference: sp/Rehash.java:224-291 retries at the network layer).
+  *   - executors in other JVMs (`local-cluster[...]`, a real cluster):
+  *     `Dataset.checkpoint` to the checkpoint directory. Blocks become FILES:
+  *     executor loss costs a re-read, not a job restart, matching the
+  *     reference's fault model where shuffle loss is a task-level retry, not
+  *     a job-level one (reference: sp/Rehash.java:224-291 retries at the
+  *     network layer). A `localCheckpoint` there loses the query terminally
+  *     when an executor dies (FETCHFAIL_evidence.log — q_dedup_prefix died
+  *     on STAGE_MATERIALIZATION_MULTIPLE_FAILURES after an executor kill).
   *     The input is persisted MEMORY_AND_DISK around the checkpoint so the
   *     checkpoint write job reads cached blocks instead of recomputing the
   *     whole plan (RDD.checkpoint's documented second computation), then
@@ -42,7 +31,7 @@ import org.apache.spark.storage.StorageLevel
   *     does not own (CacheManager matches by logical plan, so an
   *     unconditional unpersist here would drop the caller's blocks too).
   *
-  * Reliable mode needs a checkpoint dir EVERY EXECUTOR CAN READ. The
+  * The file checkpoint needs a checkpoint dir EVERY EXECUTOR CAN READ. The
   * resolution order: (1) `sc.setCheckpointDir(...)` if the application
   * already set one; (2) the `graft.pin.dir` runtime conf; (3) on a
   * single-box master only (`local[*]` / `local-cluster[...]`, where every
@@ -50,38 +39,19 @@ import org.apache.spark.storage.StorageLevel
   * distributed master there is NO fallback — pin() fails fast instead,
   * because a driver-local tmp path silently becomes per-NODE /tmp: each
   * executor writes its own checkpoint part files locally, the post-loss
-  * re-read on a different node hits missing files, and the "reliable" mode
+  * re-read on a different node hits missing files, and the file checkpoint
   * dies exactly when it was supposed to save the job (Spark itself merely
   * logs a warning). Cluster recipe:
   * `spark.sparkContext.setCheckpointDir("hdfs://.../graft-pins")` (or
   * `--conf graft.pin.dir=<DFS path>`) before the first pin.
   *
-  * Reliable mode is always EAGER (the write is the pin); the `eager` flag
-  * only controls the localCheckpoint path, where laziness lets plan-only
-  * consumers (PlanDump) build without executing. At 100 TB the conf to set
-  * alongside is `spark.cleaner.referenceTracking.cleanCheckpoints=true` so
-  * checkpoint files of GC'd plans are reaped during long multi-pin jobs.
+  * The file checkpoint is always EAGER (the write is the pin); the `eager`
+  * flag only controls the localCheckpoint path, where laziness lets
+  * plan-only consumers (PlanDump) build without executing. Every
+  * [[GraftSession]] sets `spark.cleaner.referenceTracking.cleanCheckpoints`
+  * so checkpoint files of GC'd plans are reaped during long multi-pin jobs.
   */
 object Pinned {
-
-  /** Runtime conf key selecting the durability mode: unset/`false` =
-    * localCheckpoint, `true` = reliable file checkpoint, `auto` = reliable
-    * iff the pinned plan's Catalyst size estimate is at least
-    * [[AutoBytesKey]]. `auto` mechanizes the measured crossover (BASELINE
-    * round-17 crossover table): the eager file pin pays for itself once the
-    * pinned projection reaches the low-GB range (semantic family flips at
-    * 1.5-4.5 GB, the many-small-pin CC family at 4.5-15 GB), while below it
-    * the per-round write dominates.
-    */
-  val ReliableKey = "graft.pin.reliable"
-
-  /** Runtime conf key for the `auto` threshold in bytes (default 4 GiB —
-    * between the two measured family crossovers, conservative for the CC
-    * family whose per-round pins are smaller than its corpus).
-    */
-  val AutoBytesKey = "graft.pin.autoBytes"
-
-  private val AutoBytesDefault: Long = 4L << 30
 
   /** Runtime conf key for the checkpoint dir used when the SparkContext has
     * none set (single-box convenience; clusters should `setCheckpointDir`
@@ -89,7 +59,14 @@ object Pinned {
     */
   val DirKey = "graft.pin.dir"
 
-  /** Resolve the checkpoint dir for a reliable pin when the SparkContext has
+  /** The durability rule: file checkpoints iff executors live in other JVMs
+    * than the driver. `master` is local iff it is `local` or `local[...]`,
+    * the same test as `SparkContext.isLocal`; `local-cluster[...]` is not.
+    */
+  private[graft] def reliableFor(master: String): Boolean =
+    !(master == "local" || master.startsWith("local["))
+
+  /** Resolve the checkpoint dir for a file pin when the SparkContext has
     * none set: `graft.pin.dir` if given; otherwise a java.io.tmpdir fallback
     * ONLY when every executor shares this box's filesystem (`local[*]` /
     * `local-cluster[...]`). A distributed master with neither source fails
@@ -103,41 +80,26 @@ object Pinned {
       applicationId: String,
       confDir: Option[String]): String = confDir.getOrElse {
     require(isLocal || master.startsWith("local-cluster"),
-      s"$ReliableKey=true on master '$master' requires a checkpoint dir " +
-        "visible to every executor: call SparkContext.setCheckpointDir" +
-        s"(<DFS path>) or set $DirKey. Refusing the java.io.tmpdir " +
-        "fallback — on a cluster it resolves to per-node /tmp, so " +
-        "executors checkpoint to files no other node can read and " +
+      s"Pinning on master '$master' writes file checkpoints and requires a " +
+        "checkpoint dir visible to every executor: call " +
+        s"SparkContext.setCheckpointDir(<DFS path>) or set $DirKey. Refusing " +
+        "the java.io.tmpdir fallback — on a cluster it resolves to per-node " +
+        "/tmp, so executors checkpoint to files no other node can read and " +
         "recovery fails exactly when an executor is lost.")
     new java.io.File(sys.props("java.io.tmpdir"), s"graft-pins-$applicationId")
       .getAbsolutePath
   }
 
-  def pin[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
-    val spark = ds.sparkSession
-    val reliable =
-      spark.conf.getOption(ReliableKey).map(_.trim.toLowerCase) match {
-        case Some("true") => true
-        case Some("auto") =>
-          // Catalyst's estimate for the pinned subplan (propagated from the
-          // scan through the operators) — an order-of-magnitude signal, which
-          // is all the crossover needs: the measured flip points sit a full
-          // decade apart from the regimes on either side. CRITICAL: computed
-          // on a DETACHED QueryExecution, never ds.queryExecution — forcing
-          // the dataset's own QE here resolves its withCachedData stage
-          // BEFORE the reliable branch's persist() registers the cache, so
-          // the eager checkpoint would bypass the around-checkpoint cache
-          // and recompute the whole plan (measured at sf100: +80% CPU and
-          // the default-mode exchange class back in the profile)
-          val bytes = spark.sessionState.executePlan(ds.queryExecution.logical)
-            .optimizedPlan.stats.sizeInBytes
-          val bound = spark.conf.getOption(AutoBytesKey)
-            .map(_.trim.toLong).getOrElse(AutoBytesDefault)
-          bytes >= bound
-        case _ => false
-      }
+  def pin[T](ds: Dataset[T], eager: Boolean): Dataset[T] =
+    pin(ds, eager, reliableFor(ds.sparkSession.sparkContext.master))
+
+  /** [[pin]] with the durability chosen by the caller instead of the
+    * master; the specs exercise the file path on their local session.
+    */
+  private[graft] def pin[T](ds: Dataset[T], eager: Boolean, reliable: Boolean): Dataset[T] =
     if (!reliable) ds.localCheckpoint(eager)
     else {
+      val spark = ds.sparkSession
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(resolveCheckpointDir(
@@ -160,7 +122,6 @@ object Pinned {
       try ds.checkpoint(eager = true)
       finally if (!preCached) ds.unpersist(blocking = false)
     }
-  }
 
   /** `df.pinned(eager)` — call-site syntax for [[pin]]. Named `pinned` (not
     * `pin`) to stay visually distinct from the streaming watermark-pin idiom

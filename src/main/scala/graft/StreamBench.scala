@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * Env: the session env GraftSession reads (SPARK_GRAFT_CPUS sets cores and
   * shuffle partitions; SPARK_GRAFT_MASTER=local-cluster[...] runs the
   * stateful operators across separate executor JVMs, with real state-store
-  * serialization and shuffle transport); SPARK_GRAFT_ROCKSDB=1 swaps
-  * HDFS-backed state for RocksDB.
+  * serialization and shuffle transport). State is GraftSession's one
+  * policy, the HDFS-backed store.
   */
 object StreamBench {
   private val Epoch = 1700000000000L // ms; event time advances 3 ms/row
@@ -49,12 +49,10 @@ object StreamBench {
       System.err.println(Usage)
       sys.exit(2)
     }
-    val rocksdb = sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")
-    val spark = GraftSession.start(GraftSession.fromEnv(
-      GraftSession.builder(rocksDbStateStore = rocksdb)))
+    val spark = GraftSession.start()
     val secs = runSoakFullChain(spark, total, batchSize, GraftSession.cpus)
     val rps = total / secs
-    println(f"""{"metric":"stream_rows_per_sec","value":$rps%.0f,"unit":"rows/sec","mode":"soak_fullchain","stateStore":"${if (rocksdb) "rocksdb" else "hdfs"}","rows":$total,"secs":$secs%.3f}""")
+    println(f"""{"metric":"stream_rows_per_sec","value":$rps%.0f,"unit":"rows/sec","mode":"soak_fullchain","rows":$total,"secs":$secs%.3f}""")
     spark.stop()
   }
 

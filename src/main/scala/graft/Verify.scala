@@ -1,12 +1,15 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is logged as `[verify] <name> failed` and skipped, so its missing
+  * output fails the compare; it is never re-run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // Partitions are fixture-sized (GraftSession.shufflePartitionsFor); the
-    // master (e.g. a multi-JVM local-cluster) and pin mode come from the env
+    // master (e.g. a multi-JVM local-cluster, whose pins are checkpoint files
+    // that survive an executor kill; see graft.Pinned) comes from the env
     // GraftSession reads.
     val spark = GraftSession.start(GraftSession.fromEnv(GraftSession.builder(
       shufflePartitions = GraftSession.shufflePartitionsFor(sfDir, GraftSession.cpus))))
@@ -26,39 +29,14 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None        => SparkEntry.queries
     }).filter(q => !skip(q._1))
-    // SPARK_GRAFT_VERIFY_RETRIES=n re-runs a FAILED query up to n times
-    // (default 0 = unchanged). Exists for the executor-kill chaos pass:
-    // losing an executor strands that query's localCheckpoint blocks
-    // (localCheckpoint trades fault tolerance for speed BY CONTRACT —
-    // Spark recomputes lost shuffle output but not lost local checkpoints),
-    // so the in-flight query can fail terminally. The production answer is
-    // a bounded JOB-level retry — what any orchestrator does on executor
-    // loss — and determinism says the retry must hash-match the oracle.
-    // SPARK_GRAFT_PIN_RELIABLE=true removes the failure class entirely
-    // (pins become files; see graft.Pinned), making this knob chaos-only.
-    val retries = sys.env.get("SPARK_GRAFT_VERIFY_RETRIES").map { v =>
-      try v.trim.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_VERIFY_RETRIES must be an integer, got '$v'")
-      }
-    }.getOrElse(0)
     selected.foreach { case (name, fn) =>
-      var attempt = 0
-      var done = false
-      while (!done) {
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          done = true
-        } catch {
-          // NonFatal only: an OutOfMemoryError / linkage error means the
-          // session itself is suspect — re-running queries against it
-          // would produce garbage evidence, so let it crash the run.
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[verify] $name failed (attempt ${attempt + 1}): ${e.getMessage}")
-            attempt += 1
-            if (attempt > retries) done = true
-        }
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      catch {
+        // NonFatal only: an OutOfMemoryError / linkage error means the
+        // session itself is suspect — running more queries against it
+        // would produce garbage evidence, so let it crash the run.
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

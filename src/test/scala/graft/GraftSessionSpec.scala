@@ -14,6 +14,10 @@ class GraftSessionSpec extends SparkSpec {
     assert(c.get("spark.sql.adaptive.skewJoin.enabled") === "true")
     assert(c.get("spark.sql.autoBroadcastJoinThreshold") === (64L * 1024 * 1024).toString)
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
+    // checkpoint files of GC'd plans are reaped (file pins on a multi-JVM
+    // master); a static conf, so it must be on the SparkContext
+    assert(spark.sparkContext.getConf.get(
+      "spark.cleaner.referenceTracking.cleanCheckpoints") === "true")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
 

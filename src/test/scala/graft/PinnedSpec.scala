@@ -3,21 +3,21 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.Pinned.PinnedOps
 
-/** The pin primitive's two durability modes (round-15 verdict item 1).
+/** The pin primitive's two durability paths and the rule that picks one
+  * from the master.
   *
-  * Contract under test: `pinned` must (a) cut lineage in BOTH modes — the
-  * iterative operators depend on it, (b) return the same rows in both
-  * modes, and (c) in reliable mode produce on-disk checkpoint FILES (the
-  * artifact that survives executor loss, unlike localCheckpoint blocks),
-  * while leaving no lingering persist (the around-checkpoint cache is an
-  * internal optimization, not a leak).
+  * Contract under test: `pinned` must (a) cut lineage on BOTH paths — the
+  * iterative operators depend on it, (b) return the same rows on both, and
+  * (c) on the reliable path produce on-disk checkpoint FILES (the artifact
+  * that survives executor loss, unlike localCheckpoint blocks), while
+  * leaving no lingering persist (the around-checkpoint cache is an internal
+  * optimization, not a leak). The suite's session is `local[4,2]`, so the
+  * reliable cases take the path through the internal overload.
   */
 class PinnedSpec extends SparkSpec {
 
-  private def withReliable[A](body: => A): A = {
-    spark.conf.set(Pinned.ReliableKey, "true")
-    try body finally spark.conf.unset(Pinned.ReliableKey)
-  }
+  private def reliablePin[T](ds: org.apache.spark.sql.Dataset[T]) =
+    Pinned.pin(ds, eager = false, reliable = true)
 
   /** Persistent-RDD ids registered since the `before` snapshot. Suites run
     * sequentially and the ContextCleaner only REMOVES entries, so this is
@@ -40,6 +40,30 @@ class PinnedSpec extends SparkSpec {
   private def base = spark.range(0, 1000).select(
     col("id"), (col("id") % 7).as("k"), (col("id") * 3).as("v"))
 
+  test("the durability rule: file pins iff executors live in other JVMs") {
+    assert(!Pinned.reliableFor("local"))
+    assert(!Pinned.reliableFor("local[4]"))
+    assert(!Pinned.reliableFor("local[4,2]"))
+    assert(!Pinned.reliableFor("local[*]"))
+    assert(Pinned.reliableFor("local-cluster[2,2,1024]"))
+    assert(Pinned.reliableFor("spark://h:7077"))
+    // the rule reads the master the way SparkContext.isLocal does
+    val sc = spark.sparkContext
+    assert(Pinned.reliableFor(sc.master) === !sc.isLocal)
+  }
+
+  test("local-master pins take the localCheckpoint path") {
+    val before = persistentIds
+    val p = base.pinned(true)
+    // localCheckpoint's signature: the pinned RDD itself is registered as a
+    // persistent RDD (its blocks ARE the pin); the reliable path leaves no
+    // persistent entry behind
+    assert(addedSince(before).nonEmpty,
+      "on a local master a pin must localCheckpoint (persistent RDD blocks)")
+    assert(p.count() === 1000)
+    p.unpersist(blocking = true)
+  }
+
   test("default mode pins cut lineage and preserve rows") {
     val p = base.pinned(false)
     // lineage cut: the pinned plan is a leaf scan of materialized blocks,
@@ -51,35 +75,31 @@ class PinnedSpec extends SparkSpec {
   }
 
   test("reliable mode writes checkpoint files, same rows, no lingering persist") {
-    withReliable {
-      val before = persistentIds
-      val p = base.pinned(false) // reliable mode is always eager by contract
-      val dir = spark.sparkContext.getCheckpointDir
-      assert(dir.nonEmpty, "reliable pin must establish a checkpoint dir")
-      val files = new java.io.File(new java.net.URI(dir.get).getPath match {
-        case "" => dir.get; case path => path
-      })
-      def allFiles(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(allFiles) else Seq(f)
-      assert(allFiles(files).exists(_.getName.startsWith("part-")),
-        s"expected checkpoint part files under $files")
-      assert(p.queryExecution.optimizedPlan.collectLeaves().forall(
-        _.getClass.getSimpleName.contains("LogicalRDD")))
-      assert(p.count() === 1000)
-      assert(p.agg(sum("v")).head.getLong(0) === base.agg(sum("v")).head.getLong(0))
-      assert(releasedSince(before), "the around-checkpoint persist must be released")
-    }
+    val before = persistentIds
+    val p = reliablePin(base) // reliable mode is always eager by contract
+    val dir = spark.sparkContext.getCheckpointDir
+    assert(dir.nonEmpty, "reliable pin must establish a checkpoint dir")
+    val files = new java.io.File(new java.net.URI(dir.get).getPath match {
+      case "" => dir.get; case path => path
+    })
+    def allFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(allFiles) else Seq(f)
+    assert(allFiles(files).exists(_.getName.startsWith("part-")),
+      s"expected checkpoint part files under $files")
+    assert(p.queryExecution.optimizedPlan.collectLeaves().forall(
+      _.getClass.getSimpleName.contains("LogicalRDD")))
+    assert(p.count() === 1000)
+    assert(p.agg(sum("v")).head.getLong(0) === base.agg(sum("v")).head.getLong(0))
+    assert(releasedSince(before), "the around-checkpoint persist must be released")
   }
 
   test("reliable mode supports the iterative fold shape") {
-    withReliable {
-      // the k-means / BPE / CC idiom: re-pin a shrinking state each round
-      val out = (1 to 3).foldLeft(base) { (df, _) =>
-        df.filter(col("id") % 2 === 0).select(
-          (col("id") / 2).cast("long").as("id"), col("k"), col("v")).pinned(false)
-      }
-      assert(out.count() === 125)
+    // the k-means / BPE / CC idiom: re-pin a shrinking state each round
+    val out = (1 to 3).foldLeft(base) { (df, _) =>
+      reliablePin(df.filter(col("id") % 2 === 0).select(
+        (col("id") / 2).cast("long").as("id"), col("k"), col("v")))
     }
+    assert(out.count() === 125)
   }
 
   test("reliable mode refuses the tmpdir fallback on a distributed master") {
@@ -105,65 +125,24 @@ class PinnedSpec extends SparkSpec {
   }
 
   test("reliable pin leaves a pre-existing cache of the same plan in place") {
-    withReliable {
-      val d = base
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        d.count()
-        val p = d.pinned(false)
-        assert(p.count() === 1000)
-        // CacheManager matches by logical plan: an unconditional
-        // persist/unpersist inside pin() would evict this entry (r16 advice)
-        assert(d.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
-          "pin must not evict the caller's cache")
-      } finally d.unpersist(blocking = true)
-    }
-  }
-
-  private def withAuto[A](autoBytes: Long)(body: => A): A = {
-    spark.conf.set(Pinned.ReliableKey, "auto")
-    spark.conf.set(Pinned.AutoBytesKey, autoBytes.toString)
-    try body finally {
-      spark.conf.unset(Pinned.ReliableKey)
-      spark.conf.unset(Pinned.AutoBytesKey)
-    }
-  }
-
-  test("auto mode below the byte bound takes the localCheckpoint path") {
-    withAuto(Long.MaxValue) {
-      val before = persistentIds
-      val p = base.pinned(true)
-      // localCheckpoint's signature: the pinned RDD itself is registered as
-      // a persistent RDD (its blocks ARE the pin); the reliable path leaves
-      // no persistent entry behind
-      assert(addedSince(before).nonEmpty,
-        "below the bound, auto must localCheckpoint (persistent RDD blocks)")
+    val d = base
+    d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      d.count()
+      val p = reliablePin(d)
       assert(p.count() === 1000)
-      p.unpersist(blocking = true)
-    }
-  }
-
-  test("auto mode at the byte bound takes the reliable file path") {
-    withAuto(1L) {
-      val before = persistentIds
-      val p = base.pinned(true)
-      assert(releasedSince(before),
-        "above the bound, auto must file-checkpoint (no lingering persist)")
-      val dir = spark.sparkContext.getCheckpointDir
-      assert(dir.nonEmpty, "auto-reliable pin must establish a checkpoint dir")
-      assert(p.queryExecution.optimizedPlan.collectLeaves().forall(
-        _.getClass.getSimpleName.contains("LogicalRDD")))
-      assert(p.count() === 1000)
-    }
+      // CacheManager matches by logical plan: an unconditional
+      // persist/unpersist inside pin() would evict this entry (r16 advice)
+      assert(d.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+        "pin must not evict the caller's cache")
+    } finally d.unpersist(blocking = true)
   }
 
   test("both modes agree on a grouped aggregate") {
     val d = base.pinned(false).groupBy("k").agg(sum("v").as("sv"))
       .orderBy("k").collect().map(_.toSeq)
-    val r = withReliable {
-      base.pinned(false).groupBy("k").agg(sum("v").as("sv"))
-        .orderBy("k").collect().map(_.toSeq)
-    }
+    val r = reliablePin(base).groupBy("k").agg(sum("v").as("sv"))
+      .orderBy("k").collect().map(_.toSeq)
     assert(d.toSeq === r.toSeq)
   }
 }

@@ -12,7 +12,7 @@
 # checkpoint on a surviving/relaunched executor and the admission set must
 # come out exactly the same as an undisturbed run.
 #
-# Usage: bash tools/soakkill_fullchain.sh [rows] [batch] [kill_s] [rocksdb]
+# Usage: bash tools/soakkill_fullchain.sh [rows] [batch] [kill_s]
 # Artifacts: SOAKKILL_evidence.log (+ /tmp/soakkill_*.log)
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -21,7 +21,6 @@ ROWS="${1:-2000000}"
 # more input batches per query) always has the batches it needs
 BATCH="${2:-$(( ROWS / 10 ))}"
 KILL_S="${3:-30}"
-ROCKSDB="${4:-0}"
 EVID=SOAKKILL_evidence.log
 # Sized from this machine's cores and RAM: two executors share the cores,
 # each gets 1/8 of RAM (1-12 GB) and the driver 1/4 (2-8 GB), so the whole
@@ -67,7 +66,7 @@ run_one() { # $1=log $2=kill(0/1)
   # evidence needs are DAGScheduler INFO lines, below the WARN root level
   SPARK_GRAFT_MASTER="$MASTER" SPARK_SCALA_VERSION=2.13 \
     SPARK_GRAFT_LOG_DAG=1 \
-    SPARK_GRAFT_EXECUTOR_MEM="${EXEC_MB}m" SPARK_GRAFT_ROCKSDB="$ROCKSDB" \
+    SPARK_GRAFT_EXECUTOR_MEM="${EXEC_MB}m" \
     SPARK_GRAFT_CPUS="$CPUS" SPARK_DRIVER_MEM="${DRIVER_MB}m" \
     bash tools/run_verify.sh graft.StreamBench soak_fullchain "$ROWS" "$BATCH" \
     > "$1" 2>&1
@@ -99,7 +98,7 @@ EOF
 }
 
 : > "$EVID"
-echo "mode=soak_fullchain rows=$ROWS batch=$BATCH master=$MASTER executor_mem=${EXEC_MB}m driver_mem=${DRIVER_MB}m cpus=$CPUS rocksdb=$ROCKSDB kill_at=${KILL_S}s" >> "$EVID"
+echo "mode=soak_fullchain rows=$ROWS batch=$BATCH master=$MASTER executor_mem=${EXEC_MB}m driver_mem=${DRIVER_MB}m cpus=$CPUS kill_at=${KILL_S}s" >> "$EVID"
 
 echo "--- kill run ---" >> "$EVID"
 read -r KILL_WALL KILL_RC <<< "$(run_one /tmp/soakkill_kill.log 1)"
