@@ -1,5 +1,9 @@
 package graft
 
+import java.io.File
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
@@ -43,7 +47,13 @@ import org.apache.spark.storage.StorageLevel
   * dies exactly when it was supposed to save the job (Spark itself merely
   * logs a warning). Cluster recipe:
   * `spark.sparkContext.setCheckpointDir("hdfs://.../graft-pins")` (or
-  * `--conf graft.pin.dir=<DFS path>`) before the first pin.
+  * `--conf graft.pin.dir=<DFS path>`) before the first pin. The fallback
+  * directory is the session's own and is deleted when its SparkContext
+  * stops ([[DeleteOnEnd]]); a caller's `setCheckpointDir` or `graft.pin.dir`
+  * is never deleted. On `local-cluster[...]` the fallback makes Spark log
+  * "checkpoint directory must not be on the local filesystem" once per
+  * context: expected there, since every executor JVM shares this box's
+  * filesystem (the single-box fallback above).
   *
   * The file checkpoint is always EAGER (the write is the pin); the `eager`
   * flag only controls the localCheckpoint path, where laziness lets
@@ -86,8 +96,16 @@ object Pinned {
         "the java.io.tmpdir fallback — on a cluster it resolves to per-node " +
         "/tmp, so executors checkpoint to files no other node can read and " +
         "recovery fails exactly when an executor is lost.")
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft-pins-$applicationId")
-      .getAbsolutePath
+    new File(sys.props("java.io.tmpdir"), s"graft-pins-$applicationId").getAbsolutePath
+  }
+
+  /** Deletes the `java.io.tmpdir` fallback checkpoint dir, with everything
+    * under it, when the application ends. Registered only by the [[pin]]
+    * that created the fallback.
+    */
+  private[graft] final class DeleteOnEnd(dir: File) extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+      FileUtils.deleteQuietly(dir)
   }
 
   def pin[T](ds: Dataset[T], eager: Boolean): Dataset[T] =
@@ -101,9 +119,12 @@ object Pinned {
     else {
       val spark = ds.sparkSession
       val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(resolveCheckpointDir(
-          sc.master, sc.isLocal, sc.applicationId, spark.conf.getOption(DirKey)))
+      if (sc.getCheckpointDir.isEmpty) {
+        val confDir = spark.conf.getOption(DirKey)
+        val dir = resolveCheckpointDir(sc.master, sc.isLocal, sc.applicationId, confDir)
+        sc.setCheckpointDir(dir)
+        if (confDir.isEmpty) sc.addSparkListener(new DeleteOnEnd(new File(dir)))
+      }
       // A pre-existing cache entry for this plan means the CALLER (or an
       // equivalent plan elsewhere) holds blocks that persist/unpersist here
       // would evict out from under them (CacheManager matches by logical

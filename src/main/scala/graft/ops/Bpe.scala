@@ -1,9 +1,13 @@
 package graft.ops
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.Tables
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Pinned.PinnedOps
 
 /** Distributed BPE (byte-pair-encoding) merge learning — the vocabulary-
@@ -16,19 +20,23 @@ import graft.Pinned.PinnedOps
   * operation is the first word-frequency aggregate — a partial-aggregated
   * groupBy whose output is the distinct-word table (vocabulary-sized, ~10^6
   * rows for a trillion-token corpus, thousands of times smaller than the
-  * corpus). Merge learning then iterates on that pinned table: each round is
-  * one pair-count aggregate over the vocab plus a map-side `replace`, never
-  * touching the corpus again. Per round the driver reads exactly ONE row
-  * (the winning pair) — the merge IS the model parameter, and it must reach
-  * the driver to become a literal in the next round's plan; same class as
-  * the documented 1-row convergence read in `Dedup.connectedComponents`.
+  * corpus). Merge learning then iterates on that pinned table's internal-row
+  * RDD: each round is ONE RDD job (a weighted `reduceByKey` pair count and a
+  * `takeOrdered`) plus a map-side `replace`, with no per-round Catalyst plan
+  * (procedural iteration is the RDD API's case in the Spark SQL paper). Per
+  * round the driver reads one row per reduce partition and keeps the winner
+  * — the merge IS the model parameter, and it must reach the driver to
+  * become the next round's `replace` pattern; same class as the documented
+  * 1-row convergence read in `Dedup.connectedComponents`.
   *
   * Determinism & engine parity:
   *   - words: whitespace tokens of the normalized text; symbols: one
   *     character each plus a terminal `</w>` marker, space-joined with
   *     framing spaces (" t h e </w> ").
   *   - winning pair per round: max count, ties broken by (a, b) binary
-  *     string order — both engines' default comparison.
+  *     string order — both engines' default comparison. The RDD loop calls
+  *     the `UTF8String` methods Spark's `trim`, `split`, `replace` and sort
+  *     call: UTF-8 byte order, not `String.compareTo`'s UTF-16 order.
   *   - merge application: `replace(syms, " a b ", " ab ")` — BOTH engines'
   *     `replace` scans left-to-right non-overlapping, so on a run of 3+
   *     identical symbols ("a a a a") the shared-boundary second occurrence
@@ -54,58 +62,85 @@ object Bpe {
       concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 "), lit("</w> ")).as("syms"),
       col("freq"))
 
-  /** Weighted adjacent-pair counts of the current symbol table. */
-  private def pairCounts(state: DataFrame): DataFrame =
-    state
-      .withColumn("t", split(trim(col("syms")), " "))
-      // a fully-merged word is a single symbol: no adjacent pairs. Without
-      // the filter, sequence(0, size-2) = sequence(0, -1) DESCENDS to
-      // [0, -1] and t[i+1] faults (the oracle's list_zip slice is naturally
-      // empty there)
-      .filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(0, size(t) - 2), i -> struct(t[i] AS a, t[i + 1] AS b))")).as("p"),
-        col("freq"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum(col("freq")).as("cnt"))
+  /** A symbol table row: (syms, freq). */
+  private type Vocab = RDD[(UTF8String, Long)]
+
+  /** A counted adjacent pair: ((a, b), cnt). */
+  private type Pair = ((UTF8String, UTF8String), Long)
+
+  /** (cnt DESC, a, b) in binary string order — the SQL `ORDER BY`. */
+  private val PairOrder: Ordering[Pair] = (x, y) => {
+    val c = java.lang.Long.compare(y._2, x._2)
+    val ca = if (c != 0) c else x._1._1.binaryCompare(y._1._1)
+    if (ca != 0) ca else x._1._2.binaryCompare(y._1._2)
+  }
+
+  /** The top `k` weighted adjacent pairs of the current symbol table: one
+    * job, a map-side-combined pair count over `parts` reduce partitions and
+    * a `takeOrdered`. A fully-merged word is one symbol and yields no pair.
+    */
+  private def topPairs(state: Vocab, k: Int, parts: Int): Array[Pair] = {
+    val space = UTF8String.fromString(" ")
+    state.flatMap { case (syms, freq) =>
+      val t = syms.trim().split(space, -1)
+      Iterator.range(0, t.length - 1).map(i => ((t(i), t(i + 1)), freq))
+    }.reduceByKey(_ + _, parts).takeOrdered(k)(PairOrder)
+  }
+
+  /** Apply the merge (a, b): `replace(syms, " a b ", " ab ")`. */
+  private def merge(state: Vocab, pair: Pair): Vocab = {
+    val ((a, b), _) = pair
+    val space = UTF8String.fromString(" ")
+    val pat = UTF8String.concat(space, a, space, b, space)
+    val rep = UTF8String.concat(space, a, b, space)
+    state.map { case (syms, freq) => (syms.replace(pat, rep), freq) }
+  }
+
+  /** The merge loop of both learners: per round, the top `k` pairs and, in
+    * rank order and up to `m`, those that share no symbol with a higher-
+    * ranked one ([[learnMergesBatched]]); `k = m = 1` is sequential BPE.
+    * Returns the selected pairs of each round.
+    */
+  private def learn(docs: DataFrame, rounds: Int, m: Int, k: Int): Seq[Seq[Pair]] = {
+    val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // pin the vocab table: every round re-reads it, the corpus is scanned once
+    var state: Vocab = symbolized(wordFreqs(docs)).pinned(false).queryExecution.toRdd
+      .map(r => (r.getUTF8String(0).clone(), r.getLong(1))) // scan rows are reused
+    val out = ArrayBuffer[Seq[Pair]]()
+    var exhausted = false
+    while (out.length < rounds && !exhausted) {
+      val cand = topPairs(state, k, parts) // the per-round model read
+      val selected = cand.indices.filterNot { i =>
+        val ((a, b), _) = cand(i)
+        cand.take(i).exists { case ((qa, qb), _) => qa == a || qa == b || qb == a || qb == b }
+      }.take(m).map(cand)
+      // empty corpus, or every word fully merged before `rounds` rounds:
+      // stop with the merges learned so far
+      if (selected.isEmpty) exhausted = true
+      else {
+        out += selected
+        state = selected.foldLeft(state)(merge)
+      }
+    }
+    out.toSeq
+  }
+
+  /** A merge table: one long column per name in `keys`, then a, b, merged, cnt. */
+  private def table(spark: SparkSession, keys: Seq[String], rows: Seq[(Seq[Long], Pair)]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (ks, ((a, b), cnt)) =>
+        Row.fromSeq(ks ++ Seq(a.toString, b.toString, a.toString + b.toString, cnt))
+      }, 1),
+      StructType(keys.map(StructField(_, LongType, nullable = false)) ++
+        Seq("a", "b", "merged").map(StructField(_, StringType, nullable = false)) :+
+        StructField("cnt", LongType, nullable = false)))
 
   /** Learn `n` merges; returns (rank, a, b, merged, cnt) — the merge table
     * in learned order, i.e. the tokenizer model.
     */
-  def learnMerges(docs: DataFrame, n: Int = NumMerges): DataFrame = {
-    val spark = docs.sparkSession
-    // pin the vocab table: every round re-reads it, the corpus is scanned once
-    var state = symbolized(wordFreqs(docs)).pinned(false)
-    val merges = Seq.newBuilder[Row]
-    var rank = 1
-    var exhausted = false
-    while (rank <= n && !exhausted) {
-      val top = pairCounts(state)
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1)
-        .collect().headOption // the ONE-row model read, see scaladoc
-      top match {
-        case None =>
-          // empty corpus, or every word fully merged before n rounds: stop
-          // with the merges learned so far instead of indexing into nothing
-          exhausted = true
-        case Some(row) =>
-          val (a, b, cnt) = (row.getString(0), row.getString(1), row.getLong(2))
-          merges += Row(rank.toLong, a, b, a + b, cnt)
-          state = state.withColumn("syms",
-            call_function("replace", col("syms"), lit(s" $a $b "), lit(s" $a$b ")))
-          rank += 1
-      }
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(merges.result(), 1),
-      StructType(Seq(
-        StructField("rank", LongType, nullable = false),
-        StructField("a", StringType, nullable = false),
-        StructField("b", StringType, nullable = false),
-        StructField("merged", StringType, nullable = false),
-        StructField("cnt", LongType, nullable = false))))
-  }
+  def learnMerges(docs: DataFrame, n: Int = NumMerges): DataFrame =
+    table(docs.sparkSession, Seq("rank"),
+      learn(docs, n, 1, 1).flatten.zipWithIndex.map { case (p, i) => (Seq(i + 1L), p) })
 
   val BatchRounds = 2
   val BatchM = 4
@@ -136,52 +171,17 @@ object Bpe {
     * chain (a,b) → (ab,&lt;/w&gt;), which ranks first sequentially but shares
     * `ab` and so waits a round here. With m=1 the rule degenerates to top-1
     * and the output equals `learnMerges` exactly (asserted in BpeSpec).
-    * Driver cadence: ONE k-row read per round instead of one 1-row read per
-    * merge.
+    * Driver cadence: ONE RDD job per round, whose `takeOrdered` reads up to
+    * `k` rows per reduce partition and keeps the top `k`, instead of one job
+    * per merge; the selected merges then fold into the round's `replace`
+    * chain.
     */
   def learnMergesBatched(docs: DataFrame, rounds: Int = BatchRounds,
-      m: Int = BatchM, k: Int = CandWindow): DataFrame = {
-    val spark = docs.sparkSession
-    var state = symbolized(wordFreqs(docs)).pinned(false)
-    val out = Seq.newBuilder[Row]
-    var round = 1
-    var exhausted = false
-    while (round <= rounds && !exhausted) {
-      val cand = pairCounts(state)
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(k)
-        .collect() // the per-round model read: k candidate rows, not 1
-      val selected = cand.zipWithIndex.filter { case (p, i) =>
-        val (a, b) = (p.getString(0), p.getString(1))
-        !cand.take(i).exists { q =>
-          val (qa, qb) = (q.getString(0), q.getString(1))
-          qa == a || qa == b || qb == a || qb == b
-        }
-      }.map(_._1).take(m)
-      if (selected.isEmpty) exhausted = true
-      else {
-        selected.zipWithIndex.foreach { case (p, j) =>
-          out += Row(round.toLong, (j + 1).toLong, p.getString(0), p.getString(1),
-            p.getString(0) + p.getString(1), p.getLong(2))
-        }
-        state = selected.foldLeft(state) { (df, p) =>
-          val (a, b) = (p.getString(0), p.getString(1))
-          df.withColumn("syms",
-            call_function("replace", col("syms"), lit(s" $a $b "), lit(s" $a$b ")))
-        }
-        round += 1
-      }
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.result(), 1),
-      StructType(Seq(
-        StructField("round", LongType, nullable = false),
-        StructField("sel", LongType, nullable = false),
-        StructField("a", StringType, nullable = false),
-        StructField("b", StringType, nullable = false),
-        StructField("merged", StringType, nullable = false),
-        StructField("cnt", LongType, nullable = false))))
-  }
+      m: Int = BatchM, k: Int = CandWindow): DataFrame =
+    table(docs.sparkSession, Seq("round", "sel"),
+      learn(docs, rounds, m, k).zipWithIndex.flatMap { case (sel, r) =>
+        sel.zipWithIndex.map { case (p, j) => (Seq(r + 1L, j + 1L), p) }
+      })
 
   /** Broadcast-model guard for [[encode]]: each merge becomes one `replace`
     * literal in the plan, so the model size IS the plan size — a real BPE

@@ -18,7 +18,7 @@ import graft.Pinned.PinnedOps
   * pinned); each GD round is one partial-aggregated scan of the tiny
   * feature projection — gradients fold map-side, the driver reads ONE row
   * per round (the new weight vector = the model, the `Bpe.learnMerges`
-  * one-row-model-read class). This IS distributed full-batch GD: params
+  * per-round model-read class). This IS distributed full-batch GD: params
   * broadcast down, gradients aggregate up.
   *
   * Engine parity: the logistic is the HARD sigmoid `clamp(0.5 + z/4, 0, 1)`

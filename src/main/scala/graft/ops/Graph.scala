@@ -62,7 +62,7 @@ object Graph {
   private def edgeList(docs: DataFrame): (DataFrame, DataFrame) = {
     val toks = docs
       .select(Text.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2) // sequence(1, 0) would DESCEND (see Bpe.pairCounts)
+      .filter(size(col("toks")) >= 2) // sequence(1, 0) would DESCEND and toks[-1] fault
     val und = toks
       .select(explode(expr(
         "transform(sequence(1, size(toks) - 1), i -> struct(toks[i - 1] AS a, toks[i] AS b))")).as("p"))

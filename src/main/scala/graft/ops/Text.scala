@@ -303,7 +303,7 @@ object Text {
       .select(col("term"))
 
   /** The derived query terms as a driver-side value — the model-parameter
-    * read (same class as [[Bpe.learnMerges]]'s one-row collect and
+    * read (same class as [[Bpe.learnMerges]]'s per-round winning pair and
     * [[Curation.benchmarkShingleSet]]'s suite collect: ≤ `k` strings, by
     * contract query-sized, never corpus-sized). Consumers feed it back to
     * [[bm25]] as a literal `isin`, so the SCORING query keeps the map-only

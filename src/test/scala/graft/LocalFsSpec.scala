@@ -2,7 +2,8 @@ package graft
 
 import java.io.FileNotFoundException
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, LinkOption}
+import java.nio.file.attribute.{BasicFileAttributeView, FileTime}
 
 import scala.util.Try
 
@@ -74,6 +75,12 @@ class LocalFsSpec extends SparkSpec {
       Files.createDirectory(root.resolve("dir"))
       Files.createSymbolicLink(root.resolve("link"), root.resolve("file"))
       Files.createSymbolicLink(root.resolve("dangling"), root.resolve("gone"))
+      // the trees are written one after the other: give both one mtime, so a
+      // clock tick between the writes is not read as a filesystem difference
+      Seq("file", "dir", "link", "dangling").foreach { n =>
+        Files.getFileAttributeView(root.resolve(n), classOf[BasicFileAttributeView],
+          LinkOption.NOFOLLOW_LINKS).setTimes(FileTime.fromMillis(1700000000000L), null, null)
+      }
     }
     // the same tree under two roots: every field but the root itself, or the
     // exception class. A qualified path hides links from Hadoop's readlink,

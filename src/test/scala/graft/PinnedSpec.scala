@@ -124,6 +124,16 @@ class PinnedSpec extends SparkSpec {
       .contains("graft-pins-app-123"))
   }
 
+  test("the tmpdir fallback dir is deleted, recursively, when the application ends") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins-spec").toFile
+    val sub = new java.io.File(dir, "uuid/rdd-1")
+    assert(sub.mkdirs())
+    java.nio.file.Files.write(new java.io.File(sub, "part-00000").toPath, Array[Byte](1, 2))
+    new Pinned.DeleteOnEnd(dir).onApplicationEnd(
+      org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
+    assert(!dir.exists(), s"$dir must be gone at application end")
+  }
+
   test("reliable pin leaves a pre-existing cache of the same plan in place") {
     val d = base
     d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

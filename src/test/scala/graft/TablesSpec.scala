@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** `Tables.load`'s per-session relation catalog: a table file is resolved
@@ -22,19 +19,6 @@ class TablesSpec extends SparkSpec {
     Files.copy(java.nio.file.Paths.get(sf(), s"$from.parquet"), f)
     f.toFile.deleteOnExit()
     f
-  }
-
-  /** Jobs started on the shared SparkContext while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerDrain.drain(sc) } finally sc.removeSparkListener(l)
-    n.get
   }
 
   private def load(s: SparkSession, f: Path) =

@@ -37,6 +37,30 @@ class BpeSpec extends SparkSpec {
     assert(m(1) == (("a", "</w>", 1L)))
   }
 
+  test("ties break in UTF-8 byte order, not UTF-16 order") {
+    // "\uD83D\uDE00\uD83D\uDE00 \uFFFD\uFFFD": the four pairs (😀,😀) (😀,</w>)
+    // (\uFFFD,\uFFFD) (\uFFFD,</w>) all count 1. In UTF-8 bytes U+FFFD (EF BF BD)
+    // sorts before U+1F600 (F0 9F 98 80), as Spark's and DuckDB's string sort
+    // have it; UTF-16 (String.compareTo) puts the surrogate D83D first
+    val m = Bpe.learnMerges(docs((1L, "\uD83D\uDE00\uD83D\uDE00 \uFFFD\uFFFD")), n = 1)
+      .collect().map(r => (r.getString(1), r.getString(2), r.getLong(4)))
+    assert(m.toSeq == Seq(("\uFFFD", "</w>", 1L)))
+  }
+
+  test("an empty corpus learns no merges") {
+    val none = docs()
+    assert(Bpe.learnMerges(none, n = 3).collect().isEmpty)
+    assert(Bpe.learnMergesBatched(none, rounds = 2).collect().isEmpty)
+  }
+
+  test("job budget: one job per merge round, plus the vocabulary pin") {
+    val corpus = docs((1L, "low low low lower"), (2L, "lowest slow slow"))
+    var merges = 0
+    val jobs = jobsDuring { merges = Bpe.learnMerges(corpus, n = 3).collect().length }
+    assert(merges == 3)
+    assert(jobs <= 3 + 3, s"learnMerges(n = 3) ran $jobs jobs")
+  }
+
   test("batched with m=1 degenerates to exactly the sequential merge sequence") {
     val corpus = docs((1L, "low low low lower"), (2L, "lowest slow slow"))
     val seqM = Bpe.learnMerges(corpus, n = 6)
