@@ -31,6 +31,11 @@ import org.apache.spark.sql.SparkSession
   *   - `SPARK_GRAFT_BENCH_ONLY=q_a,q_b` restricts the run to the named
   *     queries, so re-adjudicating one suspect query doesn't cost a full
   *     session.
+  *   - per query, `compiles` counts the classes Janino compiled over its
+  *     timed passes (Spark's `CodegenMetrics`), and the headline carries
+  *     `compiles_total`. The passes run back-to-back, so their median hides
+  *     a generated-class cache that re-compiles every run; this count shows
+  *     it (0 on a warm pass of a query whose generated code is stable).
   *   - per query, `cpu_ms` (process CPU time over the timed passes) and
   *     `load` (peak 1-min system load) make EXTERNAL starvation readable
   *     from the artifact alone: wall time 100x healthy with cpu_ms/wall far
@@ -118,7 +123,12 @@ object Bench {
 
   private case class QStat(
       times: Seq[Double], gcDeltaMs: Long, cpuDeltaMs: Long, loadMax: Double,
-      storagePeak: Long, storageAfter: Long, rddsPeak: Int, shuffleMbPerPass: Double)
+      storagePeak: Long, storageAfter: Long, rddsPeak: Int, shuffleMbPerPass: Double,
+      compiles: Long)
+
+  /** Classes Janino has compiled in this JVM (Spark's codegen cache misses). */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Pure-CPU rig calibration (round-13 verdict item 7): ~2 s of a fixed
     * single-threaded work unit (LCG mix + array xor over 8 MB — enough to
@@ -194,6 +204,7 @@ object Bench {
           val gc0 = gcMs()
           val cpu0 = cpuMs()
           val sh0 = shuffleBytes(spark)
+          val cc0 = compiles()
           var stPeak = 0L
           var stAfter = 0L
           var rddPeak = 0
@@ -215,7 +226,8 @@ object Bench {
           val shMb = (shuffleBytes(spark) - sh0) / passes.toDouble / 1e6
           name -> Right(QStat(times.sorted, gcMs() - gc0,
             { val c = cpuMs(); if (c < 0 || cpu0 < 0) -1L else c - cpu0 },
-            loadMax, stPeak, stAfter, rddPeak, math.round(shMb * 1000) / 1000.0))
+            loadMax, stPeak, stAfter, rddPeak, math.round(shMb * 1000) / 1000.0,
+            compiles() - cc0))
         } catch {
           case e: Throwable =>
             sweep(spark) // a FAILED query must not leak its blocks into the next timings
@@ -235,7 +247,8 @@ object Bench {
           ",\"storage_bytes\":" + s.storagePeak +
           ",\"storage_after\":" + s.storageAfter +
           ",\"n_rdds\":" + s.rddsPeak +
-          ",\"shuffle_mb\":" + s.shuffleMbPerPass + "}"
+          ",\"shuffle_mb\":" + s.shuffleMbPerPass +
+          ",\"compiles\":" + s.compiles + "}"
       case (k, Left(err)) =>
         "\"" + k + "\":{\"err\":\"" + err.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\"}"
     }.mkString("{", ",", "}")
@@ -245,6 +258,7 @@ object Bench {
     val cpuTotal = results.collect { case (_, Right(s)) => s.cpuDeltaMs }.filter(_ >= 0).sum
     val shuffleTotal =
       math.round(results.collect { case (_, Right(s)) => s.shuffleMbPerPass }.sum * 1000) / 1000.0
+    val compilesTotal = results.collect { case (_, Right(s)) => s.compiles }.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val ncores = Runtime.getRuntime.availableProcessors
     // measured AFTER the queries: the anchor then reflects the rig state the
@@ -252,7 +266,7 @@ object Bench {
     // arrives mid-session). ~2 s, single-threaded, no Spark.
     val anchor = math.round(cpuAnchor() * 100) / 100.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"ncores":$ncores,"cpu_anchor":$anchor,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"compiles_total":$compilesTotal,"ncores":$ncores,"cpu_anchor":$anchor,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // The driver scrapes a bounded stdout tail, which truncated the big line
     // mid-JSON in rounds 5 and 6. Persist the full line to a file as the
     // durable primary artifact, print it, then print a SHORT headline LAST so
@@ -272,7 +286,7 @@ object Bench {
     val qsCompact = results.collect { case (k, Right(s)) =>
       "\"" + k + "\":" + median(s.times)
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"ncores":$ncores,"cpu_anchor":$anchor,"nqueries":${results.size},"queries":$qsCompact,"failed":$failedJson,"bench_out":"$outFile","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"gc_ms_total":$gcTotal,"cpu_ms_total":$cpuTotal,"shuffle_mb_total":$shuffleTotal,"compiles_total":$compilesTotal,"ncores":$ncores,"cpu_anchor":$anchor,"nqueries":${results.size},"queries":$qsCompact,"failed":$failedJson,"bench_out":"$outFile","sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -61,6 +61,19 @@ object GraftSession {
   /** Planning policy [[builder]] sets on top of the [[contract]]. [[tune]]
     * leaves these alone: a session built elsewhere (or a spec) may set them
     * on purpose, e.g. a -1 broadcast threshold at scale.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's generated-class cache
+    * to the registry's working set. Spark's default of 100 entries (split
+    * across Guava segments, so eviction starts earlier) is far below the
+    * ~2,400 entries one registry pass fills at sf0.01 (a source compiles
+    * once per class loader: the driver's and the task threads'), so every
+    * warm pass Janino-compiled thousands of classes again; 4,096 covers the
+    * set with headroom. It is a static conf that `CodeGenerator`'s static
+    * initializer reads once per JVM from `SQLConf.get`, so:
+    *   - it takes effect only through [[builder]];
+    *   - [[tune]] cannot apply it to a session built elsewhere;
+    *   - it holds only if no code touches `CodeGenerator` before [[start]]
+    *     (or the builder's `getOrCreate`) in this JVM.
     */
   private val policy: Seq[(String, String)] = Seq(
     // Skewed group/join keys re-split at runtime; essential at 100 TB where
@@ -70,7 +83,16 @@ object GraftSession {
     // A multi-JVM master pins to checkpoint FILES ([[Pinned]]); reap those of
     // GC'd plans, or a long multi-pin run keeps every dead plan's files on
     // disk. A static conf, and a no-op for local checkpoints.
-    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+    // Compile each generated source once per class loader (see above).
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // A whole-stage class is named after its codegen stage id, and AQE
+    // numbers the stages as it re-plans after each query stage finishes, an
+    // order that varies from run to run. Keyed by source, the cache then
+    // missed on every run of a plan with concurrent stages (q_rfm: 4-22
+    // classes per warm pass). The id stays in the source's
+    // `codegenStageId` comment.
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** `file://` for every session [[builder]] makes: `fs.file.impl` is
     * [[ForkFreeLocalFileSystem]] (the `FileSystem` API: reliable pins,

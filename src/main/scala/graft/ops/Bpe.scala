@@ -76,15 +76,17 @@ object Bpe {
   }
 
   /** The top `k` weighted adjacent pairs of the current symbol table: one
-    * job, a map-side-combined pair count over `parts` reduce partitions and
+    * job, a map-side-combined pair count over the vocabulary's own
+    * partitions (AQE-coalesced when it was pinned, so its width follows the
+    * vocabulary, not the fixture-sized `spark.sql.shuffle.partitions`) and
     * a `takeOrdered`. A fully-merged word is one symbol and yields no pair.
     */
-  private def topPairs(state: Vocab, k: Int, parts: Int): Array[Pair] = {
+  private def topPairs(state: Vocab, k: Int): Array[Pair] = {
     val space = UTF8String.fromString(" ")
     state.flatMap { case (syms, freq) =>
       val t = syms.trim().split(space, -1)
       Iterator.range(0, t.length - 1).map(i => ((t(i), t(i + 1)), freq))
-    }.reduceByKey(_ + _, parts).takeOrdered(k)(PairOrder)
+    }.reduceByKey(_ + _, state.getNumPartitions).takeOrdered(k)(PairOrder)
   }
 
   /** Apply the merge (a, b): `replace(syms, " a b ", " ab ")`. */
@@ -102,14 +104,13 @@ object Bpe {
     * Returns the selected pairs of each round.
     */
   private def learn(docs: DataFrame, rounds: Int, m: Int, k: Int): Seq[Seq[Pair]] = {
-    val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // pin the vocab table: every round re-reads it, the corpus is scanned once
     var state: Vocab = symbolized(wordFreqs(docs)).pinned(false).queryExecution.toRdd
       .map(r => (r.getUTF8String(0).clone(), r.getLong(1))) // scan rows are reused
     val out = ArrayBuffer[Seq[Pair]]()
     var exhausted = false
     while (out.length < rounds && !exhausted) {
-      val cand = topPairs(state, k, parts) // the per-round model read
+      val cand = topPairs(state, k) // the per-round model read
       val selected = cand.indices.filterNot { i =>
         val ((a, b), _) = cand(i)
         cand.take(i).exists { case ((qa, qb), _) => qa == a || qa == b || qb == a || qb == b }
