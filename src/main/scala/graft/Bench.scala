@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
   * BENCH_r{N}.json and graded against BASELINE.md.
   *
   * Per query: an untimed warm-up (JIT, codegen cache, parquet footer cache,
-  * broadcast build) then N>=3 timed passes, reporting the MEDIAN plus the
+  * broadcast build) then 3 timed passes, reporting the MEDIAN plus the
   * min/max spread. A single-sample timer cannot distinguish GC/AQE variance
   * from a regression — round 4 recorded a false 3x "regression" that a re-run
   * showed was one noisy sample. The reference's own numbers are steady-state
@@ -168,7 +168,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
+    val passes = 3
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b re-checks a suspect subset. An
     // unknown name is LOUD: a typo silently benching zero queries would read
     // as a vacuous pass.

@@ -73,7 +73,7 @@ object MicroBench {
     val shinglesSql =
       "array_distinct(transform(sequence(1, size(toks) - 2), " +
         "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', element_at(toks, i + 2))))"
-    val hashSql = "cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint)"
+    val hashSql = graft.functions.Determinism.md5LongSql("s")
     def agg(c: org.apache.spark.sql.Column): Long =
       toks.filter(size(col("toks")) >= 3).select(sum(c)).collect()(0).getLong(0)
     time("tokens (cached baseline)", 5)(agg(size(col("toks"))))

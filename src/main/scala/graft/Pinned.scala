@@ -56,8 +56,7 @@ import org.apache.spark.storage.StorageLevel
   * filesystem (the single-box fallback above).
   *
   * The file checkpoint is always EAGER (the write is the pin); the `eager`
-  * flag only controls the localCheckpoint path, where laziness lets
-  * plan-only consumers (PlanDump) build without executing. Every
+  * flag only controls the localCheckpoint path. Every
   * [[GraftSession]] sets `spark.cleaner.referenceTracking.cleanCheckpoints`
   * so checkpoint files of GC'd plans are reaped during long multi-pin jobs.
   */

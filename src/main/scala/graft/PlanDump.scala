@@ -12,18 +12,11 @@ object PlanDump {
 
   /** Dump the executed plans of `names` against `sfDir`. */
   def dump(spark: SparkSession, names: Seq[String], sfDir: String): Unit = {
-    // SPARK_GRAFT_PLAN_FORMAT=formatted prints `explain("formatted")` output
-    // (numbered operators + per-operator details: PushedFilters, ReadSchema,
-    // join build side) — the round-17 plan-evidence format; default stays the
-    // executed-plan tree the PLANS.md audits use.
-    val formatted = sys.env.get("SPARK_GRAFT_PLAN_FORMAT").contains("formatted")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       df.collect()
       println(s"===== $n =====")
-      if (formatted) println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      else println(df.queryExecution.executedPlan.toString)
+      println(df.queryExecution.executedPlan.toString)
     }
   }
 

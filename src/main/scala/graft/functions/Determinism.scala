@@ -21,6 +21,12 @@ object Determinism {
   def md5Long(s: String): Long =
     java.lang.Long.parseLong(md5Hex(s).substring(0, 15), 16)
 
+  /** [[md5Long]] of the SQL string expression `e`, spelled as Spark SQL: the
+    * one Spark-side spelling of the engine-portable 60-bit hash.
+    */
+  def md5LongSql(e: String): String =
+    s"cast(conv(substr(md5($e), 1, 15), 16, 10) as bigint)"
+
   /** n ±1.0 signs from the bits of md5(seed) (n <= 128). */
   def signs(seed: String, n: Int): IndexedSeq[Double] = {
     require(n <= 128)

@@ -297,85 +297,15 @@ object ShingleHashes {
   }
 }
 
-/** Bigram LM instance hashes in one native pass: for each adjacent token
-  * pair (i, i+1), a struct of `u` = 60-bit md5 of token i and `bg` = 60-bit
-  * md5 of `tok_i || ' ' || tok_{i+1}` — exactly the SQL spelling the LM
-  * family's oracles replay (`transform(sequence(1, size(toks)-1), i ->
-  * struct(hash(tok_i) AS u, hash(concat3) AS bg))`). ALL instances, in
-  * order, duplicates kept (the consumers count them). Each token digests
-  * once for its `u` (cached across the slide); the pair digests once.
-  * Fewer than 2 tokens → empty array.
-  */
-case class BigramPairHashes(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("u", LongType, nullable = false),
-      StructField("bg", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "graft_bigram_pair_hashes"
-
-  override protected def nullSafeEval(a: Any): Any =
-    BigramPairHashes.compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.BigramPairHashes.compute($a)")
-
-  override protected def withNewChildInternal(c: Expression): BigramPairHashes =
-    copy(child = c)
-}
-
-object BigramPairHashes {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private def h60(digest: java.security.MessageDigest, buf: Array[Byte]): Long = {
-    digest.reset()
-    val dg = digest.digest(buf)
-    var h = 0L
-    var k = 0
-    while (k < 8) { h = (h << 8) | (dg(k) & 0xffL); k += 1 }
-    h >>> 4
-  }
-
-  /** Static entry shared by interpreted eval and generated code. */
-  def compute(toks: ArrayData): ArrayData = {
-    val n = toks.numElements()
-    if (n < 2)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[org.apache.spark.sql.catalyst.InternalRow])
-    val digest = md.get()
-    val out = new Array[org.apache.spark.sql.catalyst.InternalRow](n - 1)
-    var prev = toks.getUTF8String(0).getBytes
-    var prevH = h60(digest, prev)
-    var i = 0
-    while (i < n - 1) {
-      val next = toks.getUTF8String(i + 1).getBytes
-      val pair = new Array[Byte](prev.length + next.length + 1)
-      System.arraycopy(prev, 0, pair, 0, prev.length)
-      pair(prev.length) = ' '
-      System.arraycopy(next, 0, pair, prev.length + 1, next.length)
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-      row.setLong(0, prevH)
-      row.setLong(1, h60(digest, pair))
-      out(i) = row
-      prev = next
-      prevH = h60(digest, prev)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.asInstanceOf[Array[Any]])
-  }
-}
-
-/** Per-document bigram-instance COUNTS in one native pass: the distinct
-  * (u, bg) hash pairs of [[BigramPairHashes]] with their within-row
-  * occurrence counts, emitted in first-occurrence order. Value-identical
-  * AS AN UNORDERED SET to `explode(graft_bigram_pair_hashes(toks))`
-  * followed by `groupBy(u, bg).agg(count(*) AS nd)` restricted to this row
+/** Per-document bigram-instance COUNTS in one native pass. A bigram
+  * instance is an adjacent token pair (i, i+1), keyed by `u` = 60-bit md5
+  * of token i and `bg` = 60-bit md5 of `tok_i || ' ' || tok_{i+1}` — the SQL
+  * spelling the LM family's oracles replay (`transform(sequence(1,
+  * size(toks)-1), i -> struct(hash(tok_i) AS u, hash(concat3) AS bg))`).
+  * This emits the distinct (u, bg) pairs with their within-row occurrence
+  * counts `nd`, in first-occurrence order. Value-identical AS AN UNORDERED
+  * SET to `explode` of that SQL spelling followed by
+  * `groupBy(u, bg).agg(count(*) AS nd)` restricted to this row
   * (ExpressionsSpec pins the multiset equality on real corpus docs) — and
   * since every downstream consumer groups or joins on (u, bg) (never on
   * array position), replacing explode+groupBy with explode(this) computes
@@ -384,9 +314,8 @@ object BigramPairHashes {
   * no exchange at all — the former `groupBy(doc_id, u, bg)` shuffled the
   * full already-deduped instance stream and re-probed a partition-wide
   * hash table just to merge groups that were never split. Each token
-  * digests once (u cached across the slide), each pair once — identical
-  * digest work to [[BigramPairHashes]]; the count map adds one probe per
-  * instance. Fewer than 2 tokens → empty array.
+  * digests once (u cached across the slide), each pair once; the count map
+  * adds one probe per instance. Fewer than 2 tokens → empty array.
   */
 case class BigramCountHashes(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -1135,10 +1064,6 @@ object GraftFunctions {
 
   def normalizeText(a: Column): Column =
     GraftBridge.column(NormalizeText(GraftBridge.expression(a)))
-
-  /** See [[BigramPairHashes]]. */
-  def bigramPairHashes(toks: Column): Column =
-    GraftBridge.column(BigramPairHashes(GraftBridge.expression(toks)))
 
   /** See [[BigramCountHashes]]. */
   def bigramCountHashes(toks: Column): Column =

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.Determinism
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,10 +36,6 @@ import graft.Pinned.PinnedOps
   * the SURVEY §6 pipeline inventory alongside Sampling/Curation.
   */
 object Corpus {
-
-  private def hashSql(e: String): String =
-    s"cast(conv(substr(md5($e), 1, 15), 16, 10) as bigint)"
-
 
   /** Per-shard running sum of `valueCol` in `order` within each `shardCol`
     * shard — the primitive behind the packing/budget layouts — as a
@@ -77,12 +74,9 @@ object Corpus {
     * offsets window + broadcast join-back) earns its cost only when a shard
     * is too big for one task. A probe (`limit(k+1).count`) checks whether
     * the WHOLE input fits comfortably in one window task — at or under
-    * `graft.cumsum.windowMaxRows` rows (default shuffle.partitions × 1024)
-    * — and if so runs the plain per-shard window instead. Values are
-    * identical either way (CorpusSpec asserts both modes against each
-    * other); only the physical plan differs. Set the conf to 0 to force the
-    * two-level form always (the CorpusSpec funnel asserts do), or large to
-    * force the window form.
+    * shuffle.partitions × 1024 rows — and if so runs the plain per-shard
+    * window instead. Values are identical either way (CorpusSpec asserts
+    * both modes against each other); only the physical plan differs.
     *
     * Probe cost, honestly: the limit bounds OUTPUT, not compute — over a
     * map-only input it short-circuits after ~one partition, but when a
@@ -105,7 +99,25 @@ object Corpus {
       valueCol: String,
       shardCol: String,
       order: Seq[Column],
-      outCol: String): DataFrame = {
+      outCol: String): DataFrame =
+    shardedCumsum(df, valueCol, shardCol, order, outCol, windowRowBound(df))
+
+  /** The plain-window bound of [[shardedCumsum]]: 1,024 rows per shuffle
+    * partition.
+    */
+  private def windowRowBound(df: DataFrame): Long =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toLong * 1024L
+
+  /** [[shardedCumsum]] with the plain-window bound chosen by the caller; 0
+    * forces the two-level form (the CorpusSpec funnel asserts).
+    */
+  private[ops] def shardedCumsum(
+      df: DataFrame,
+      valueCol: String,
+      shardCol: String,
+      order: Seq[Column],
+      outCol: String,
+      maxRows: Long): DataFrame = {
     val shardIdx = df.columns.indexOf(shardCol)
     val valIdx = df.columns.indexOf(valueCol)
     require(shardIdx >= 0 && valIdx >= 0, s"missing $shardCol or $valueCol")
@@ -113,10 +125,6 @@ object Corpus {
     // coalesce a small input back to ONE partition — exactly the funnel this
     // operator exists to avoid (same pin as Dedup's bucket repartitions).
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val maxRows = df.sparkSession.conf.get("graft.cumsum.windowMaxRows", "auto") match {
-      case "auto" => n.toLong * 1024L
-      case v => v.toLong
-    }
     val small = maxRows > 0 && {
       val key = (df.queryExecution.logical.semanticHash(), maxRows)
       val memo = cumsumProbeMemo.get(key)
@@ -201,7 +209,18 @@ object Corpus {
       capacity: Long,
       shardCol: String = "source",
       orderCol: String = "doc_id"): DataFrame =
-    shardedCumsum(counts, "n_tokens", shardCol, Seq(col(orderCol)), "cum")
+    packSequencesFromCounts(counts, capacity, shardCol, orderCol, windowRowBound(counts))
+
+  /** [[packSequencesFromCounts]] with the cumsum's plain-window bound chosen
+    * by the caller (see the [[shardedCumsum]] overload).
+    */
+  private[ops] def packSequencesFromCounts(
+      counts: DataFrame,
+      capacity: Long,
+      shardCol: String,
+      orderCol: String,
+      maxRows: Long): DataFrame =
+    shardedCumsum(counts, "n_tokens", shardCol, Seq(col(orderCol)), "cum", maxRows)
       .select(col(orderCol), col(shardCol), col("n_tokens"),
         // integral `div`, not `/`: the `/` operator is double division and a
         // shard cumsum past 2^53 tokens would lose exactness in the cast
@@ -276,7 +295,7 @@ object Corpus {
       .select(col(shardCol), expr("w_e6 * t_total div 1000000L").as("quota"))
     docs
       .select(col("doc_id"), col(shardCol),
-        expr(hashSql("cast(doc_id as string)")).as("h"))
+        expr(Determinism.md5LongSql("cast(doc_id as string)")).as("h"))
       .withColumn("rnk", row_number()
         .over(Window.partitionBy(col(shardCol)).orderBy(col("h"), col("doc_id")))
         .cast("long"))
@@ -394,20 +413,26 @@ object Corpus {
     * form, and it is guarded like the all-pairs dedup baselines: one shingle
     * present in all S sources contributes S² self-join rows, and at web
     * scale near-universal boilerplate shingles make that the dominant term.
-    * Past `graft.corpus.overlapShingleLimit` inverted-index rows (default
-    * 2M) the exact form fails fast with a pointer at the `maxDf` cut — the
+    * Past `OverlapShingleLimit` inverted-index rows (2M) the exact form
+    * fails fast with a pointer at the `maxDf` cut — the
     * scale path, oracle-checked by `q_source_overlap_cut`. The probe counts
     * the PRE-distinct exploded rows — an upper bound on the index size
     * through which `limit` genuinely short-circuits (map-only, no shuffle
     * barrier), so the guard never costs a full corpus pass; it is
     * conservative on heavily-repetitive corpora whose distinct index would
-    * have fit (raise the conf there). The probe runs on EVERY call —
+    * have fit (pass a finite `maxDf` there). The probe runs on EVERY call —
     * deliberately un-memoized, so growth past the limit mid-session still
     * trips it.
     */
   val OverlapShingleLimit = 2000000L
 
-  def sourceOverlap(docs: DataFrame, maxDf: Int = Int.MaxValue): DataFrame = {
+  def sourceOverlap(docs: DataFrame, maxDf: Int = Int.MaxValue): DataFrame =
+    sourceOverlap(docs, maxDf, OverlapShingleLimit)
+
+  /** [[sourceOverlap]] with the exact form's index bound chosen by the
+    * caller; the specs trip the guard on a small fixture.
+    */
+  private[ops] def sourceOverlap(docs: DataFrame, maxDf: Int, shingleLimit: Long): DataFrame = {
     val sh0pre = docs
       .select(col("source"), Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -418,17 +443,13 @@ object Corpus {
       // disable a safety guard — a same-path dataset growing past the limit
       // mid-session must re-trip it. The probe is one bounded map-only
       // limit+count per call; a mode memo can be stale, a guard cannot.
-      val limit = docs.sparkSession.conf
-        .get("graft.corpus.overlapShingleLimit", OverlapShingleLimit.toString).toLong
-      if (limit < Int.MaxValue) {
-        val n = sh0pre.limit(limit.toInt + 1).count()
-        require(n <= limit,
-          s"sourceOverlap without a df bound is the exact diagnostic form and the " +
-            s"inverted index may exceed $limit rows (conf graft.corpus.overlapShingleLimit; " +
-            s"the bound counts pre-distinct shingle rows): a near-universal shingle " +
-            s"contributes nSources^2 self-join rows. Pass a finite maxDf (the hot-key " +
-            s"cut, e.g. maxDf = nSources) or raise the limit.")
-      }
+      val n = sh0pre.limit(shingleLimit.toInt + 1).count()
+      require(n <= shingleLimit,
+        s"sourceOverlap without a df bound is the exact diagnostic form and the " +
+          s"inverted index may exceed $shingleLimit rows (Corpus.OverlapShingleLimit; " +
+          s"the bound counts pre-distinct shingle rows): a near-universal shingle " +
+          s"contributes nSources^2 self-join rows. Pass a finite maxDf (the hot-key " +
+          s"cut, e.g. maxDf = nSources).")
     }
     // document-frequency cut: a shingle present in more than `maxDf` sources
     // contributes maxDf² join rows while saying nothing about any PAIR —
@@ -486,8 +507,8 @@ object Corpus {
 
   private[ops] val srcPermCoeffs: IndexedSeq[(Long, Long)] =
     (0 until SrcMinhashPerms).map { i =>
-      (graft.functions.Determinism.md5Long(s"srcmh-a:$i") % (MersennePrime - 1) + 1,
-        graft.functions.Determinism.md5Long(s"srcmh-b:$i") % MersennePrime)
+      (Determinism.md5Long(s"srcmh-a:$i") % (MersennePrime - 1) + 1,
+        Determinism.md5Long(s"srcmh-b:$i") % MersennePrime)
     }
 
   def sourceOverlapMinhash(docs: DataFrame): DataFrame = {
@@ -746,7 +767,7 @@ object Corpus {
           .as("rate_e6"))
     docs
       .select(col("doc_id"), col(shardCol),
-        expr(hashSql("concat('mix:', cast(doc_id as string))")).as("h"))
+        expr(Determinism.md5LongSql("concat('mix:', cast(doc_id as string))")).as("h"))
       .join(broadcast(rates), Seq(shardCol))
       .filter(pmod(col("h"), lit(1000000L)) < col("rate_e6"))
       .select(col("doc_id"), col(shardCol))
@@ -879,7 +900,7 @@ object Corpus {
           .as("rate_e6"))
     docs
       .select(col("doc_id"), col(shardCol),
-        expr(hashSql("concat('mixt:', cast(doc_id as string))")).as("h"))
+        expr(Determinism.md5LongSql("concat('mixt:', cast(doc_id as string))")).as("h"))
       .join(broadcast(rates), Seq(shardCol))
       .filter(pmod(col("h"), lit(1000000L)) < col("rate_e6"))
       .select(col("doc_id"), col(shardCol))
@@ -953,7 +974,7 @@ object Corpus {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     val hashed = docs
       .select(col(idCol),
-        expr(hashSql(s"concat('$seed:', cast($idCol as string))")).as("h"))
+        expr(Determinism.md5LongSql(s"concat('$seed:', cast($idCol as string))")).as("h"))
       .withColumn("shard_id", (col("h") % nShards).cast("long"))
       .withColumn("__one", lit(1L))
     shardedCumsum(hashed, "__one", "shard_id", Seq(col("h"), col(idCol)), "shard_pos")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.Determinism
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,10 +27,6 @@ import graft.Pinned.PinnedOps
   * contamination pass and a dedup pass see the same document features.
   */
 object Curation {
-
-  private def hashSql(e: String): String =
-    s"cast(conv(substr(md5($e), 1, 15), 16, 10) as bigint)"
-
 
   /** (doc_id, sh) pairs: one row per distinct 3-gram shingle hash of docs
     * with at least one shingle.
@@ -69,8 +66,7 @@ object Curation {
     * headroom past the ceiling. Beyond it the set stops being a
     * task-binary-sized model parameter: switch to
     * [[contaminationFromToks]]'s JOIN path, where the benchmark side is an
-    * ordinary (broadcast-or-shuffle, Catalyst's pick) join input. Override
-    * with spark conf `graft.decontam.setLimit`.
+    * ordinary (broadcast-or-shuffle, Catalyst's pick) join input.
     */
   val DecontamSetLimit = 20000000L
 
@@ -78,17 +74,13 @@ object Curation {
     * broadcast bound would ride every task binary as a ~8·n-byte array and
     * degrade or OOM executors rather than fail cleanly.
     */
-  private[graft] def requireBroadcastableSuite(
-      spark: SparkSession, entries: Long, op: String): Unit = {
-    val limit = spark.conf
-      .get("graft.decontam.setLimit", DecontamSetLimit.toString).toLong
+  private[graft] def requireBroadcastableSuite(entries: Long, op: String, limit: Long): Unit =
     require(entries <= limit,
       s"$op probes a broadcast benchmark set of $entries shingle hashes " +
         s"(~${entries * 8L >> 20} MB riding every task binary), past the " +
-        s"$limit-entry broadcast bound (conf graft.decontam.setLimit). Use " +
+        s"$limit-entry broadcast bound (Curation.DecontamSetLimit). Use " +
         "Curation.contaminationFromToks' join path — the benchmark side " +
-        "becomes an ordinary join input — or raise the limit.")
-  }
+        "becomes an ordinary join input.")
 
   /** Decontamination as a PER-ROW gate (no benchmark join): every training
     * doc's shingle array probes the broadcast benchmark set via binary
@@ -105,9 +97,19 @@ object Curation {
       docs: DataFrame,
       benchSet: Array[Long],
       benchmarkFilter: String,
-      maxPct: Long = DecontamMaxPct): DataFrame = {
-    requireBroadcastableSuite(docs.sparkSession, benchSet.length.toLong,
-      "Curation.decontaminate")
+      maxPct: Long = DecontamMaxPct): DataFrame =
+    decontaminate(docs, benchSet, benchmarkFilter, maxPct, DecontamSetLimit)
+
+  /** [[decontaminate]] with the broadcast bound chosen by the caller; the
+    * specs trip the guard with a tiny set.
+    */
+  private[graft] def decontaminate(
+      docs: DataFrame,
+      benchSet: Array[Long],
+      benchmarkFilter: String,
+      maxPct: Long,
+      setLimit: Long): DataFrame = {
+    requireBroadcastableSuite(benchSet.length.toLong, "Curation.decontaminate", setLimit)
     docs.filter(not(expr(benchmarkFilter)))
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .select(col("doc_id"), shingleHashArr.as("shs"))
@@ -197,7 +199,7 @@ object Curation {
       .select(col("doc_id"),
         posexplode(expr("filter(transform(parts, s -> trim(s)), s -> s != '')"))
           .as(Seq("idx", "seg")))
-      .withColumn("h", expr(hashSql("seg")))
+      .withColumn("h", expr(Determinism.md5LongSql("seg")))
 
   def boilerplate(docs: DataFrame, minDf: Long = BoilerplateMinDf): DataFrame = {
     val segs = segments(docs).pinned(false)
@@ -239,7 +241,7 @@ object Curation {
       domainCol: String = "source"): DataFrame =
     docs
       .select(col("doc_id"), col(domainCol),
-        expr(hashSql("cast(doc_id as string)")).as("h"))
+        expr(Determinism.md5LongSql("cast(doc_id as string)")).as("h"))
       .withColumn("rnk", row_number()
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col(domainCol)).orderBy(col("h"), col("doc_id")))

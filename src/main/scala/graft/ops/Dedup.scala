@@ -29,10 +29,6 @@ object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** 60-bit positive long from an md5 prefix — the engine-portable hash. */
-  private def hashSql(e: String): String =
-    s"cast(conv(substr(md5($e), 1, 15), 16, 10) as bigint)"
-
   /** Word 3-gram shingles of the normalized text (distinct). The docs share a
     * small vocabulary, so unigram sets are useless for dedup; 3-gram word
     * sequences discriminate (SURVEY §7.2 step 7).
@@ -329,8 +325,8 @@ object Dedup {
       .select(col("doc_id"), col("lang"),
         GraftFunctions.shingleHashes(col("toks"), sorted = true).as("hs"))
 
-  /** Default row ceiling for the quadratic all-pairs baselines; override with
-    * spark conf `graft.dedup.allPairsLimit` or `allowAllPairs = true`.
+  /** Row ceiling for the quadratic all-pairs baselines; past it they fail
+    * fast unless the caller passes `allowAllPairs = true`.
     */
   val AllPairsLimit = 100000L
 
@@ -346,23 +342,28 @@ object Dedup {
     java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Long)]()
 
   private def guardAllPairs(df: DataFrame, op: String, alternative: String,
-      allow: Boolean): Unit =
+      allow: Boolean, limit: Long): Unit =
     if (!allow) {
-      val limit = df.sparkSession.conf
-        .get("graft.dedup.allPairsLimit", AllPairsLimit.toString).toLong
       val key = (df.queryExecution.logical.semanticHash(), limit)
-      if (limit < Int.MaxValue && !guardPassed.contains(key)) {
+      if (!guardPassed.contains(key)) {
         val n = df.limit(limit.toInt + 1).count()
         require(n <= limit,
           s"$op is a quadratic all-pairs baseline and the input exceeds $limit rows " +
-            s"(conf graft.dedup.allPairsLimit). Use $alternative for the scale-safe " +
-            s"path, raise the limit, or pass allowAllPairs = true.")
+            s"(Dedup.AllPairsLimit). Use $alternative for the scale-safe path, " +
+            s"or pass allowAllPairs = true.")
         guardPassed.add(key)
       }
     }
 
-  def ngramJaccardPairs(docs: DataFrame, allowAllPairs: Boolean = false): DataFrame = {
-    guardAllPairs(docs, "ngramJaccardPairs", "Dedup.lshVerifiedPairs", allowAllPairs)
+  def ngramJaccardPairs(docs: DataFrame, allowAllPairs: Boolean = false): DataFrame =
+    ngramJaccardPairs(docs, allowAllPairs, AllPairsLimit)
+
+  /** [[ngramJaccardPairs]] with the guard's row bound chosen by the caller;
+    * the specs trip the guard on a small fixture.
+    */
+  private[graft] def ngramJaccardPairs(docs: DataFrame, allowAllPairs: Boolean,
+      limit: Long): DataFrame = {
+    guardAllPairs(docs, "ngramJaccardPairs", "Dedup.lshVerifiedPairs", allowAllPairs, limit)
     val sh = sortedShingleHashes(docs)
     // Probe side spread across all cores with an EXPLICIT partition count
     // (AQE would coalesce the tiny shuffle to one partition and serialize the
@@ -905,9 +906,14 @@ object Dedup {
     * normalized ONCE (map-side) so the per-pair work is a single DotProduct;
     * the broadcast of one side keeps it shuffle-free.
     */
-  def embeddingPairs(embs: DataFrame, allowAllPairs: Boolean = false): DataFrame = {
+  def embeddingPairs(embs: DataFrame, allowAllPairs: Boolean = false): DataFrame =
+    embeddingPairs(embs, allowAllPairs, AllPairsLimit)
+
+  /** [[embeddingPairs]] with the guard's row bound chosen by the caller. */
+  private[graft] def embeddingPairs(embs: DataFrame, allowAllPairs: Boolean,
+      limit: Long): DataFrame = {
     guardAllPairs(embs, "embeddingPairs",
-      "Similarity.lshTopK / Similarity.ivfTopK", allowAllPairs)
+      "Similarity.lshTopK / Similarity.ivfTopK", allowAllPairs, limit)
     val e = Similarity.normalized(embs)
     val a = e.select(col("vec_id").as("vec_a"), col("nv").as("va"))
     val b = e.select(col("vec_id").as("vec_b"), col("nv").as("vb"))
@@ -1091,7 +1097,7 @@ object Dedup {
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("group_key"))
       .withColumn("h",
-        expr("cast(conv(substr(md5(cast(group_key as string)), 1, 15), 16, 10) as bigint) % 100"))
+        expr(s"${Determinism.md5LongSql("cast(group_key as string)")} % 100"))
       .select(col("doc_id"), col("group_key"),
         when(col("h") < 100 - pctVal - pctTest, lit("train"))
           .when(col("h") < 100 - pctTest, lit("val"))

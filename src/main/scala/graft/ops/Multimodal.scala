@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.Determinism
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Pinned.PinnedOps
@@ -315,7 +316,6 @@ object Multimodal {
     * end-to-end, so unlike a real encoder it is hash-checkable cross-engine.
     */
   def embedAssign(docs: DataFrame): DataFrame = {
-    val hash = (e: String) => s"cast(conv(substr(md5($e), 1, 15), 16, 10) as bigint)"
     // encoder input = the REAL decode's stats (round 10): the stub forward
     // pass now runs over genuinely-decoded content, and stays analytically
     // predictable for the cross-engine oracle
@@ -325,7 +325,7 @@ object Multimodal {
         col("g_sum").cast("string"), col("b_sum").cast("string"))).as("cmd5"))
       .withColumn("v", expr(
         s"transform(sequence(0, ${EmbedDims - 1}), " +
-          s"j -> cast(${hash("concat('emb:', cmd5, ':', j)")} % 1000 as double) / 1000.0)"))
+          s"j -> cast(${Determinism.md5LongSql("concat('emb:', cmd5, ':', j)")} % 1000 as double) / 1000.0)"))
       .withColumn("nrm", expr(
         // a real encoder can emit an all-zero vector; the epsilon floor keeps
         // the normalize NaN-free (stub values are unchanged: nrm >> 1e-12)

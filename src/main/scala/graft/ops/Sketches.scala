@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.Aggregators
+import graft.functions.{Aggregators, Determinism}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Pinned.PinnedOps
@@ -84,7 +84,7 @@ object Sketches {
     val m = HllBuckets
     events
       .select(expr("__time__ div 86400000").as("day"),
-        expr("cast(conv(substr(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)").as("h"))
+        expr(Determinism.md5LongSql("cast(user_id as string)")).as("h"))
       .select(col("day"), pmod(col("h"), lit(m.toLong)).as("bucket"),
         expr(s"h div ${m}L").as("w"))
       .groupBy(col("day"), col("bucket"))
@@ -144,7 +144,7 @@ object Sketches {
   val CmsAbsentProbe = "zzz_absent_9"
 
   private def cmsHash(i: Int, tokExpr: String): String =
-    s"cast(conv(substr(md5(concat('cms$i:', $tokExpr)), 1, 15), 16, 10) as bigint) % $CmsWidth"
+    s"${Determinism.md5LongSql(s"concat('cms$i:', $tokExpr)")} % $CmsWidth"
 
   def cmsEstimates(docs: DataFrame): DataFrame = {
     // The probe set is DERIVED from the corpus (its CmsProbeK most frequent

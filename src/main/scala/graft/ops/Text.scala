@@ -476,9 +476,6 @@ object Text {
           col("r_bullet_lines") && col("r_ellipsis_lines") && col("r_alpha_words") &&
           col("r_stop_words"))
 
-  private def hashSql(e: String): String =
-    s"cast(conv(substr(md5($e), 1, 15), 16, 10) as bigint)"
-
   /** Corpus-self bigram language-model score — the perplexity-proxy quality
     * signal (the CCNet-style filter: docs whose token transitions are
     * improbable under the corpus's own statistics are noise, boilerplate or

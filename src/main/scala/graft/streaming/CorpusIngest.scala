@@ -132,7 +132,20 @@ object CorpusIngest {
       watermarkDelay: String = "10 seconds",
       threshold: Double = graft.ops.Dedup.JaccardThreshold,
       benchShingles: Array[Long] = Array.empty,
-      decontamMaxPct: Long = graft.ops.Curation.DecontamMaxPct): DataFrame = {
+      decontamMaxPct: Long = graft.ops.Curation.DecontamMaxPct): DataFrame =
+    admittedDocs(docs, watermarkDelay, threshold, benchShingles, decontamMaxPct,
+      graft.ops.Curation.DecontamSetLimit)
+
+  /** [[admittedDocs]] with the decontamination stage's broadcast bound
+    * chosen by the caller; the specs trip the guard with a tiny set.
+    */
+  private[graft] def admittedDocs(
+      docs: DataFrame,
+      watermarkDelay: String,
+      threshold: Double,
+      benchShingles: Array[Long],
+      decontamMaxPct: Long,
+      setLimit: Long): DataFrame = {
     val toks = docs.select(
       col("ts"), col("doc_id"), col("source"),
       Text.tokens(col("text")).as("toks"))
@@ -152,9 +165,8 @@ object CorpusIngest {
     // stretch still advances event time. Verdicts equal the batch gate's
     // on the same rows (StreamingCurationSpec law).
     if (benchShingles.nonEmpty)
-      graft.ops.Curation.requireBroadcastableSuite(
-        docs.sparkSession, benchShingles.length.toLong,
-        "CorpusIngest.admittedDocs (decontamination stage)")
+      graft.ops.Curation.requireBroadcastableSuite(benchShingles.length.toLong,
+        "CorpusIngest.admittedDocs (decontamination stage)", setLimit)
     val gated =
       if (benchShingles.isEmpty) qualityGated
       else qualityGated

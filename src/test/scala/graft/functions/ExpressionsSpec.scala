@@ -89,19 +89,6 @@ class ExpressionsSpec extends SparkSpec {
       expr(s"transform(array_distinct(toks), t -> ${hashSql.replace("(s)", "(t)")})").as("sql1"),
       GraftFunctions.shingleHashes(col("toks"), n = 1).as("nat1")).collect()
     oneGram.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), "n=1"))
-    // bigram LM instance pairs: native struct array == the SQL spelling
-    val big = toks.filter(size(col("toks")) >= 2).select(
-      expr(s"""transform(sequence(1, size(toks) - 1), i -> struct(
-        ${hashSql.replace("(s)", "(element_at(toks, i))")} as u,
-        ${hashSql.replace("md5(s)", "md5(concat(element_at(toks, i), ' ', element_at(toks, i + 1)))")} as bg))""")
-        .as("sqlp"),
-      GraftFunctions.bigramPairHashes(col("toks")).as("natp")).collect()
-    assert(big.nonEmpty)
-    big.foreach { r =>
-      val s = r.getSeq[Row](0).map(x => (x.getLong(0), x.getLong(1)))
-      val m = r.getSeq[Row](1).map(x => (x.getLong(0), x.getLong(1)))
-      assert(s == m, "bigram pairs")
-    }
     // MinHashes inputMod folds the % p pre-reduction: equal to the two-step
     val mh = toks.filter(size(col("toks")) >= 3).select(
       GraftFunctions.minhashes(
@@ -145,26 +132,31 @@ class ExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("BigramCountHashes equals explode+group of BigramPairHashes on real documents") {
+  test("BigramCountHashes equals explode+group of the SQL bigram spelling on real documents") {
     import spark.implicits._
+    val hashSql = "cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint)"
+    // the LM family's bigram instances: one (u, bg) struct per adjacent pair
+    val pairsSql = s"""transform(sequence(1, size(toks) - 1), i -> struct(
+      ${hashSql.replace("(s)", "(element_at(toks, i))")} as u,
+      ${hashSql.replace("md5(s)", "md5(concat(element_at(toks, i), ' ', element_at(toks, i + 1)))")} as bg))"""
     val toks = graft.Tables.documents(spark, sf())
       .select(col("doc_id"), graft.ops.Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
+    val expected = toks.select(col("doc_id"), explode(expr(pairsSql)).as("p"))
+      .groupBy(col("doc_id"), col("p.u"), col("p.bg")).count()
+      .as[(Long, Long, Long, Long)].collect().toSet
     val both = toks.select(
       col("doc_id"),
-      GraftFunctions.bigramPairHashes(col("toks")).as("pairs"),
       GraftFunctions.bigramCountHashes(col("toks")).as("cnts")).collect()
     assert(both.nonEmpty)
-    both.foreach { r =>
-      val pairs = r.getSeq[Row](1).map(x => (x.getLong(0), x.getLong(1)))
-      val expected = pairs.groupBy(identity)
-        .map { case (k, v) => (k._1, k._2, v.size.toLong) }.toSet
-      val got = r.getSeq[Row](2).map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+    val got = both.flatMap { r =>
+      val cnts = r.getSeq[Row](1).map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
       // keys distinct (it IS a groupBy), values the exact instance counts
-      assert(got.map(g => (g._1, g._2)).distinct.size == got.size,
+      assert(cnts.map(g => (g._1, g._2)).distinct.size == cnts.size,
         s"duplicate group keys @doc ${r.getLong(0)}")
-      assert(got.toSet == expected, s"counts @doc ${r.getLong(0)}")
-    }
+      cnts.map { case (u, bg, nd) => (r.getLong(0), u, bg, nd) }
+    }.toSet
+    assert(got == expected, "counts")
     // first-occurrence emission order is deterministic; < 2 tokens -> empty
     val edge = Seq(Seq("a", "b", "a", "b", "c"), Seq("x"), Seq.empty[String]).toDF("toks")
       .select(GraftFunctions.bigramCountHashes(col("toks")).as("c")).collect()
@@ -174,7 +166,7 @@ class ExpressionsSpec extends SparkSpec {
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val interp = toks.limit(20).select(
-        GraftFunctions.bigramPairHashes(col("toks")).as("pairs"),
+        expr(pairsSql).as("pairs"),
         GraftFunctions.bigramCountHashes(col("toks")).as("cnts")).collect()
       interp.foreach { r =>
         val expected = r.getSeq[Row](0).map(x => (x.getLong(0), x.getLong(1)))

@@ -1,11 +1,21 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CorpusSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, sf())
+
+  /** `Corpus.packSequences` with the adaptive cumsum's window bound at 0,
+    * which forces the two-level form on any input.
+    */
+  private def packTwoLevel(d: DataFrame, capacity: Long): DataFrame =
+    Corpus.packSequencesFromCounts(
+      d.select(col("doc_id"), col("source"),
+        size(Text.tokens(col("text"))).cast("long").as("n_tokens")),
+      capacity, "source", "doc_id", maxRows = 0L)
 
   test("packing: offsets stay under capacity and reconstruct the shard cumsum") {
     val c = 64L
@@ -27,43 +37,41 @@ class CorpusSpec extends SparkSpec {
     // one source = the worst case for a Window.partitionBy(shard) cumsum
     // (the whole corpus would funnel through ONE window task); the two-level
     // prefix sum must keep the full-data path range-partitioned instead.
-    // Conf 0 disables the adaptive small-input window shortcut — this test
-    // pins the shape the operator takes when the input does NOT fit one task.
-    spark.conf.set("graft.cumsum.windowMaxRows", "0")
-    try {
-      val one = docs.withColumn("source", lit("onesrc"))
-      val out = Corpus.packSequences(one, 64L)
-      // the checkpointed prefix hides the range exchange behind Scan
-      // ExistingRDD, so assert the two-level shape by its visible half (the
-      // per-(shard, pid) offsets join) ...
-      val plan = out.queryExecution.executedPlan.toString.toLowerCase
-      assert(plan.contains("__pid") && plan.contains("broadcast"),
-        s"offsets broadcast-join missing — not the two-level prefix sum:\n${plan.take(1200)}")
-      assert(!plan.contains("windowspecdefinition(source#") ||
-        plan.contains("__pid"), "cumsum must not be a corpus-wide per-shard window")
-      // ... and by the data: the single shard really lands in many partitions,
-      // not one hash bucket
-      val nonEmpty = out.rdd.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
-      assert(nonEmpty > 1, s"single shard collapsed to $nonEmpty non-empty partition(s)")
-      // and the two-level sum telescopes to exactly the naive one-window cumsum
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val naive = one
-        .select(col("doc_id"), col("source"),
-          size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
-        .withColumn("cum", sum(col("n_tokens")).over(w))
-        .select(col("doc_id"), expr("(cum - n_tokens) div 64L").as("pack_id"),
-          ((col("cum") - col("n_tokens")) % 64L).cast("long").as("pack_offset"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val got = out.collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-      assert(got == naive, "two-level prefix sum must equal the one-window cumsum")
-    } finally spark.conf.unset("graft.cumsum.windowMaxRows")
+    // A window bound of 0 disables the adaptive small-input window shortcut —
+    // this test pins the shape the operator takes when the input does NOT
+    // fit one task.
+    val one = docs.withColumn("source", lit("onesrc"))
+    val out = packTwoLevel(one, 64L)
+    // the checkpointed prefix hides the range exchange behind Scan
+    // ExistingRDD, so assert the two-level shape by its visible half (the
+    // per-(shard, pid) offsets join) ...
+    val plan = out.queryExecution.executedPlan.toString.toLowerCase
+    assert(plan.contains("__pid") && plan.contains("broadcast"),
+      s"offsets broadcast-join missing — not the two-level prefix sum:\n${plan.take(1200)}")
+    assert(!plan.contains("windowspecdefinition(source#") ||
+      plan.contains("__pid"), "cumsum must not be a corpus-wide per-shard window")
+    // ... and by the data: the single shard really lands in many partitions,
+    // not one hash bucket
+    val nonEmpty = out.rdd.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
+    assert(nonEmpty > 1, s"single shard collapsed to $nonEmpty non-empty partition(s)")
+    // and the two-level sum telescopes to exactly the naive one-window cumsum
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("source")).orderBy(col("doc_id"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)
+    val naive = one
+      .select(col("doc_id"), col("source"),
+        size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
+      .withColumn("cum", sum(col("n_tokens")).over(w))
+      .select(col("doc_id"), expr("(cum - n_tokens) div 64L").as("pack_id"),
+        ((col("cum") - col("n_tokens")) % 64L).cast("long").as("pack_offset"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
+    assert(got == naive, "two-level prefix sum must equal the one-window cumsum")
   }
 
   test("adaptive cumsum: a small input takes the plain window, values identical") {
-    // default conf ("auto" = partitions x 1024): the sf fixture fits one
+    // default bound (partitions x 1024 rows): the sf fixture fits one
     // window task, so the probe must route around the two-level machinery —
     // no __pid projection, no range exchange, no checkpoint
     val small = Corpus.packSequences(docs, 64L)
@@ -73,23 +81,19 @@ class CorpusSpec extends SparkSpec {
     assert(plan.contains("windowspecdefinition"),
       "plain-window path must actually be a window")
     // and the two modes agree row-for-row
-    spark.conf.set("graft.cumsum.windowMaxRows", "0")
-    try {
-      val twoLevel = Corpus.packSequences(docs, 64L)
-        .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-      val win = small.collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-      assert(win == twoLevel, "adaptive modes must agree")
-    } finally spark.conf.unset("graft.cumsum.windowMaxRows")
+    val twoLevel = packTwoLevel(docs, 64L)
+      .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
+    val win = small.collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
+    assert(win == twoLevel, "adaptive modes must agree")
   }
 
   test("source overlap exact form fails fast past the inverted-index bound") {
-    spark.conf.set("graft.corpus.overlapShingleLimit", "10")
-    try {
-      val e = intercept[Exception](Corpus.sourceOverlap(docs).collect())
-      assert(e.getMessage.contains("maxDf"), e.getMessage)
-      // the df-cut scale path is NOT guarded: it bounds fan-out by construction
-      assert(Corpus.sourceOverlap(docs, maxDf = Corpus.OverlapMaxDf).collect().nonEmpty)
-    } finally spark.conf.unset("graft.corpus.overlapShingleLimit")
+    val e = intercept[Exception](
+      Corpus.sourceOverlap(docs, Int.MaxValue, shingleLimit = 10L).collect())
+    assert(e.getMessage.contains("maxDf"), e.getMessage)
+    assert(e.getMessage.contains("Corpus.OverlapShingleLimit"), e.getMessage)
+    // the df-cut scale path is NOT guarded: it bounds fan-out by construction
+    assert(Corpus.sourceOverlap(docs, Corpus.OverlapMaxDf, shingleLimit = 10L).collect().nonEmpty)
   }
 
   test("mix sources fails loudly on bad or unattainable weights") {

@@ -24,25 +24,25 @@ class CurationSpec extends SparkSpec {
   }
 
   test("broadcast-bound guard: oversized suite fails fast toward the join path") {
-    spark.conf.set("graft.decontam.setLimit", "4")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        Curation.decontaminate(docs, Array(1L, 2L, 3L, 4L, 5L), Curation.BenchmarkFilter)
-      }
-      assert(ex.getMessage.contains("contaminationFromToks"),
-        s"guard must name the join-path alternative: ${ex.getMessage}")
-      assert(ex.getMessage.contains("graft.decontam.setLimit"), ex.getMessage)
-      // the streaming admission chain shares the guard at plan build
-      val ex2 = intercept[IllegalArgumentException] {
-        graft.streaming.CorpusIngest.admittedDocs(
-          docs.withColumn("ts", org.apache.spark.sql.functions.timestamp_millis(col("doc_id"))),
-          benchShingles = Array(1L, 2L, 3L, 4L, 5L))
-      }
-      assert(ex2.getMessage.contains("contaminationFromToks"), ex2.getMessage)
-      // AT the bound the broadcast gate still plans and runs
-      assert(Curation.decontaminate(docs, Array(1L, 2L, 3L, 4L),
-        Curation.BenchmarkFilter).count() > 0)
-    } finally spark.conf.unset("graft.decontam.setLimit")
+    val limit = 4L
+    val ex = intercept[IllegalArgumentException] {
+      Curation.decontaminate(docs, Array(1L, 2L, 3L, 4L, 5L), Curation.BenchmarkFilter,
+        Curation.DecontamMaxPct, limit)
+    }
+    assert(ex.getMessage.contains("contaminationFromToks"),
+      s"guard must name the join-path alternative: ${ex.getMessage}")
+    assert(ex.getMessage.contains("Curation.DecontamSetLimit"), ex.getMessage)
+    // the streaming admission chain shares the guard at plan build
+    val ex2 = intercept[IllegalArgumentException] {
+      graft.streaming.CorpusIngest.admittedDocs(
+        docs.withColumn("ts", org.apache.spark.sql.functions.timestamp_millis(col("doc_id"))),
+        "10 seconds", Dedup.JaccardThreshold, Array(1L, 2L, 3L, 4L, 5L),
+        Curation.DecontamMaxPct, limit)
+    }
+    assert(ex2.getMessage.contains("contaminationFromToks"), ex2.getMessage)
+    // AT the bound the broadcast gate still plans and runs
+    assert(Curation.decontaminate(docs, Array(1L, 2L, 3L, 4L),
+      Curation.BenchmarkFilter, Curation.DecontamMaxPct, limit).count() > 0)
   }
 
   test("a doc identical to a benchmark doc is fully contaminated") {

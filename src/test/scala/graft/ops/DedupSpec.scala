@@ -69,17 +69,16 @@ class DedupSpec extends SparkSpec {
   }
 
   test("quadratic baselines refuse corpora above the all-pairs limit") {
-    spark.conf.set("graft.dedup.allPairsLimit", "2")
-    try {
-      val e1 = intercept[IllegalArgumentException](Dedup.ngramJaccardPairs(docs))
-      assert(e1.getMessage.contains("lshVerifiedPairs"))
-      val e2 = intercept[IllegalArgumentException](
-        Dedup.embeddingPairs(Tables.embeddings(spark, sf())))
-      assert(e2.getMessage.contains("Similarity"))
-      // Explicit opt-out bypasses the guard (plan builds lazily, no count job).
-      assert(Dedup.ngramJaccardPairs(docs, allowAllPairs = true).columns
-        .sameElements(Array("doc_a", "doc_b", "jaccard")))
-    } finally spark.conf.unset("graft.dedup.allPairsLimit")
+    val e1 = intercept[IllegalArgumentException](
+      Dedup.ngramJaccardPairs(docs, allowAllPairs = false, limit = 2L))
+    assert(e1.getMessage.contains("lshVerifiedPairs"))
+    assert(e1.getMessage.contains("Dedup.AllPairsLimit"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Dedup.embeddingPairs(Tables.embeddings(spark, sf()), allowAllPairs = false, limit = 2L))
+    assert(e2.getMessage.contains("Similarity"))
+    // Explicit opt-out bypasses the guard (plan builds lazily, no count job).
+    assert(Dedup.ngramJaccardPairs(docs, allowAllPairs = true, limit = 2L).columns
+      .sameElements(Array("doc_a", "doc_b", "jaccard")))
   }
 
   test("connected components collapse pair lists into min-id clusters") {

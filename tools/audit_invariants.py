@@ -167,7 +167,7 @@ def audit_guard():
     r = subprocess.run(["bash", "tools/run_verify.sh", "graft.Verify", SFDIR,
                         OUTDIR + "_guard"], capture_output=True, text=True, env=env)
     txt = r.stdout + r.stderr
-    fired = "q_source_overlap failed" in txt and "overlapShingleLimit" in txt
+    fired = "q_source_overlap failed" in txt and "Corpus.OverlapShingleLimit" in txt
     ran_clean = not fired and os.path.isdir(f"{OUTDIR}_guard/q_source_overlap")
     return {"pass": fired,
             "expectation": "the quadratic diagnostic MUST fail fast at sf1",
